@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Partitioning-determinism gate: every `SparkEntry.queries` entry is
   * executed twice — once at the production shuffle-partition count,
@@ -28,13 +27,7 @@ object DeterminismCheck {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus(8), 32)
 
     val only = sys.env.get("SPARK_GRAFT_DET_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)

@@ -146,14 +146,8 @@ object LayoutInvarianceCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = java.nio.file.Files.createTempDirectory("graft_layout").toString
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", s"$out/__warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.cpus(8), 32,
+      "spark.sql.warehouse.dir" -> s"$out/__warehouse")
 
     buildLayout(spark, sfDir, out)
     val outU = s"$out/__user_bucketed"

@@ -62,18 +62,13 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus(4)
     // a non-default value turns any gate run into a partitioning-
     // determinism check (same rows at any shuffle fan-out) without the
     // separate DeterminismCheck entry point — unset = driver contract
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_VERIFY_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val shufParts = sys.env.get("SPARK_GRAFT_VERIFY_PARTITIONS")
+      .map(_.trim.toInt).getOrElse(cpus)
+    val spark = Session.local(cpus, shufParts)
     new java.io.File(outDir).mkdirs()
     // dev-only iteration filter (unset in the driver → all queries);
     // the oracle dump is filtered identically so tools/compare.py

@@ -83,7 +83,7 @@ object DedupClusters {
 
   /** Driver path: union-find with min-id roots and path compression
     * over an undirected pair list. Returns node → component-min. */
-  private def unionFind(es: Array[(Long, Long)]): Map[Long, Long] = {
+  private[graft] def unionFind(es: Array[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = {
       var r = x
@@ -100,7 +100,9 @@ object DedupClusters {
         if (a < b) parent(b) = a else parent(a) = b
       } else parent.getOrElseUpdate(a, a)
     }
-    parent.keys.map(n => (n, find(n))).toMap
+    // snapshot the keys: find() rewrites entries (path compression),
+    // and iterating a mutable map while it is updated skips keys
+    parent.keys.toArray.map(n => (n, find(n))).toMap
   }
 
   /** Distributed path: alternating large-star / small-star edge

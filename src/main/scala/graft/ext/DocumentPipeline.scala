@@ -43,7 +43,7 @@ object DocumentPipeline {
     * ("dedup", + the one wide stage), ("sample_shard", the full
     * [[prepare]] frame, always last) — so a scale bench can attribute
     * wall time to stages by timing each prefix of the REAL plan
-    * instead of a drift-prone copy ([[graft.PipelineScaleBench]]). */
+    * instead of a drift-prone copy (`ScaleBench pipeline`). */
   def prepareStaged(docs: DataFrame, idCol: String, textCol: String,
                     minQuality: Double, sampleFraction: Double, nShards: Int,
                     salt: String): Seq[(String, DataFrame)] = {

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *     with the rule excluded the hot key sorts in ONE task and the
   *     penalty grows superlinearly. The struct-min's skew-safety is
   *     the aggregate's own algebraic property, so it is the shape we
-  *     keep. SkewScaleBench / SCALE.md round 16.)
+  *     keep. `ScaleBench skew` / SCALE.md round 16.)
   *   - per-document totals (`n_lines`) are computed from the text in
   *     the same per-row map that chunks it — dropped counts need no
   *     second pass over occurrences.

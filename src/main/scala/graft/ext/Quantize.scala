@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * bucketing/probing operator in [[TextOps]]/[[VectorKMeans]]
   * (quantize the bucketed corpus; rank candidates by ADC; optionally
   * exact-rerank the top shortlist with the float source of truth).
-  * Measured recall vs exact float ranking: AnnRecallBench `sq8` leg,
+  * Measured recall vs exact float ranking: `ScaleBench ann` `sq8_adc` leg,
   * SCALE.md round 12.
   */
 object Quantize {

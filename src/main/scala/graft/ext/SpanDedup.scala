@@ -44,7 +44,7 @@ object SpanDedup {
     * actually get — but the occurrence frame is corpus-token-SIZED, and
     * a MEMORY_AND_DISK cache of it competes with the aggregations for
     * unified memory (measured: the 10 M-doc / 280 M-occurrence leg of
-    * SpanScaleBench dies with UNABLE_TO_ACQUIRE_MEMORY in an 8 GB JVM
+    * `ScaleBench span` dies with UNABLE_TO_ACQUIRE_MEMORY in an 8 GB JVM
     * with the cache on, and completes with it off — SCALE.md round 16).
     * At 100 TB a corpus-sized intermediate is never RAM-cached:
     * `persistOcc = false` recomputes the shingle pass per branch (one

@@ -271,7 +271,7 @@ object TextOps {
     * low-margin flips carry almost all the recall: at the 20–30 planes
     * a 100 TB corpus runs (bucket size n/2^planes), probing T ≈
     * planes/2 buckets keeps most of the Hamming-1 recall at half the
-    * candidate volume (measured: graft.AnnRecallBench, SCALE.md "ANN
+    * candidate volume (measured: `ScaleBench ann`, SCALE.md "ANN
     * recall"). `margins` is the parallel |projection| array emitted by
     * [[withLshBucketMargins]]; ties break toward the lower plane index
     * so the probe list is deterministic. The probe list is ordered:

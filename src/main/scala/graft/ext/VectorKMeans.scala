@@ -307,7 +307,7 @@ object VectorKMeans {
   }
 
   /** IVF candidate generation with `nprobe` as a first-class knob
-    * (round-9 verdict #4: AnnRecallBench measured nprobe 1/2/4 but the
+    * (round-9 verdict #4: `ScaleBench ann` measured nprobe 1/2/4 but the
     * library had no parameter a user could set — q50 hard-coded its
     * top-2 cells inline). Every corpus vector is assigned to its
     * single nearest cell by CENTROID COSINE (one broadcast pass — the
@@ -316,7 +316,7 @@ object VectorKMeans {
     * is scored against exactly the candidates in those cells. Raising
     * nprobe trades candidate volume for recall monotonically
     * (nprobe = 1 candidates ⊆ nprobe = 2 ⊆ …, spec-pinned; measured
-    * curve in SCALE.md "ANN recall" / graft.AnnRecallBench).
+    * curve in SCALE.md "ANN recall" / `ScaleBench ann`).
     *
     * `e` must carry (`idCol`, `embCol` array<double>, `nrmCol` its L2
     * norm); self-matches are excluded. Output: (query_id, neighbor_id,

@@ -1,6 +1,5 @@
 package graft.nilm
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Universal appliance-label taxonomy + the 3-tier raw-label → universal
@@ -24,14 +23,10 @@ import org.apache.spark.sql.functions._
   * "computer site" is under both desktop_computer and network_device, so
   * desktop_computer wins), which is why the map is a `Seq` here.
   *
-  * The mapping is exposed two ways with identical results:
-  *   - [[universalLabel]] — a pure `Column` expression (tier 1 is a map
-  *     literal; tiers 2-3 are ordered `when` chains). Runs on the tiny
-  *     channels dim, so interpreted fallback for the long chain is fine.
-  *   - [[mapLabel]] — plain Scala, for driver-side metadata work + tests.
-  *
-  * [[oracleCaseSql]] renders the same decision procedure as one ANSI CASE
-  * expression for the DuckDB oracle.
+  * [[mapLabel]] is the decision procedure in plain Scala (the
+  * reference); [[attachUniversal]] applies it to a frame's distinct raw
+  * labels, and [[oracleCaseSql]] renders it as one ANSI CASE expression
+  * for the DuckDB oracle.
   */
 object Labels {
 
@@ -160,45 +155,22 @@ object Labels {
       .getOrElse("other")
   }
 
-  /** F1 normalization as a Column expression. */
-  def normalizeCol(c: Column): Column =
-    regexp_replace(trim(regexp_replace(lower(c), "[_\\-,]", " ")), "\\s+", " ")
-
-  /** U1 as a pure Column expression over a raw-label column. */
-  def universalLabel(raw: Column): Column = {
-    val n = normalizeCol(raw)
-    val tier1 = element_at(typedlit(exactMap), n)
-    val tier2 = orderedKeywordPairs.foldRight(lit(null).cast("string")) {
-      case ((u, k), els) => when(n.contains(k), u).otherwise(els)
-    }
-    val tier3 = tier3Pairs.foldRight(lit(null).cast("string")) {
-      case ((u, t3), els) => when(n.contains(t3), u).otherwise(els)
-    }
-    coalesce(tier1, tier2, tier3, lit("other"))
-  }
-
-  /** The scale path for label normalization: evaluate the 3-tier match
-    * only on the DISTINCT raw labels (vocabulary-sized) and broadcast-join
-    * the mapping back, instead of running the match per fact row.
-    * Adds `universal_label`.
+  /** The one label path: evaluate the 3-tier match only on the DISTINCT
+    * raw labels (vocabulary-sized) and broadcast-join the mapping back,
+    * instead of running the match per row. Adds `universal_label`;
+    * rows with a null `rawCol` are dropped by the inner join.
     *
-    * The per-distinct-label match is [[mapLabel]] behind a UDF, not the
-    * [[universalLabel]] Column form: the ~440-branch when-chain is a
-    * 41 KB expression tree that Catalyst re-analyzes, re-optimizes and
-    * Janino-compiles on EVERY query build — measured as the dominant
+    * The per-distinct-label match is [[mapLabel]] behind a UDF, not a
+    * Column expression: the ~440-branch when-chain form was a 41 KB
+    * expression tree that Catalyst re-analyzed, re-optimized and
+    * Janino-compiled on EVERY query build — measured as the dominant
     * cost of q34 (plan time, not row time: its 8-vs-32-core bench ratio
-    * was 0.99). The UDF closes over the same tiered decision procedure
-    * (tier-1 exact map, tier-2 keyword substring, tier-3 universal-name
-    * substring, first match wins — mapLabel IS the reference
-    * implementation the Column form is tested against), evaluates only
-    * on the vocabulary-sized distinct frame (never fact rows, so
-    * codegen is irrelevant here), and keeps the plan tree constant-size.
-    * Row-identity with the Column form is pinned in LabelsSpec. */
+    * was 0.99). The UDF keeps the plan tree constant-size. Row identity
+    * with mapLabel is pinned in LabelsSpec. */
   def attachUniversal(df: org.apache.spark.sql.DataFrame,
                       rawCol: String): org.apache.spark.sql.DataFrame = {
-    // null → "other", exactly like the Column form (whose coalesce
-    // bottoms out at "other" when every tier nulls out); unreachable
-    // through the inner equi-join below, which drops null keys anyway
+    // null → "other"; unreachable through the inner equi-join below,
+    // which drops null keys anyway
     val mapUdf = udf((raw: String) =>
       if (raw == null) "other" else mapLabel(raw))
     val mapping = df.select(col(rawCol)).distinct()

@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   * DESCENDING order, not a (currentRow..unboundedFollowing) frame —
   * Spark executes an unboundedFollowing frame by re-scanning the
   * remaining rows for EVERY row, O(n²) per key, which
-  * PackScaleBench round 20 measured as a superlinear bend on q101
+  * `ScaleBench pack` round 20 measured as a superlinear bend on q101
   * (×4 data → ×13 time) before this rewrite. The two directions cost
   * one exchange plus two in-partition sorts (asc + desc), both over
   * the grid-sized frame. The grid explode is `sequence(min, max,

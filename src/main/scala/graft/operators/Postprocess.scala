@@ -125,7 +125,7 @@ object Postprocess {
     * — same wide cost as every per-key ordered op here). span ≤ 16
     * evaluates as codegen'd lag columns (no per-row buffer; measured
     * 5.2× faster than the array form at span 10 on 10-30 M rows —
-    * EwmaScaleBench, SCALE.md round 17); larger spans buffer the frame
+    * `ScaleBench ewma`, SCALE.md round 17); larger spans buffer the frame
     * with collect_list and fold. Each branch sums its terms in a fixed
     * sequential order, so the result is bit-stable across
     * partitionings (the two branches differ from EACH OTHER in
@@ -141,7 +141,7 @@ object Postprocess {
     if (span <= 16) {
       // Small span: codegen'd lag columns instead of a per-row
       // collect_list buffer — measured 5.2× faster at span 10 on 10-30 M
-      // rows (EwmaScaleBench, SCALE.md round 17), the exact analogue of
+      // rows (`ScaleBench ewma`, SCALE.md round 17), the exact analogue of
       // slidingMedian's k ≤ 8 branch. Missing lags (first rows of a
       // key) contribute exactly 0.0 to both sums, appended at the TAIL
       // of the left-to-right reduction, so the value is bit-identical

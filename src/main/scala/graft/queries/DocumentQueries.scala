@@ -1709,7 +1709,7 @@ object DocumentQueries {
     // side fans out (×(planes+1)); the corpus stays single-bucket and
     // every join is still bucket-local, so the scale shape is q28's.
     // Measured recall vs the q27 brute-force ground truth: SCALE.md
-    // "ANN recall" table (graft.AnnRecallBench).
+    // "ANN recall" table (`ScaleBench ann`).
     "q82_lsh_multiprobe" -> ((s, d) => {
       import s.implicits._
       graft.plans.GraftExtensions.register(s)

@@ -50,7 +50,7 @@ object Container {
         // a year of one house doesn't fit one write task at 100 TB.
         // Channel files stay internally ts-clustered (source order), so
         // with MICROS stats a per-channel time slice prunes row groups.
-        // Measured at 300 M rows / 6.7 GB raw (IngestBench, SCALE.md
+        // Measured at 300 M rows / 6.7 GB raw (`ScaleBench ingest`, SCALE.md
         // round 20): the write is encoder-bound, not layout-bound —
         // 23 files, no small-file or listing pathology. Residual
         // caveat: a single EXTREME-rate channel (kHz waveforms × years)

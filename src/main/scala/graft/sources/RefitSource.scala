@@ -19,24 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object RefitSource {
 
-  /** Appliance metadata (`refit_appliance_metadata.json`, same shape as
-    * UK-DALE's: `{"House N": [{channel, appliance_raw_label, ...}]}`). */
-  def metadata(spark: SparkSession, path: String): DataFrame = {
-    val meta = spark.read.option("multiLine", value = true)
-      .json(s"$path/refit_appliance_metadata.json")
-    val houses = meta.schema.fieldNames.filter(_.startsWith("House "))
-    houses.map { hk =>
-      val hid = hk.stripPrefix("House ").trim.toInt
-      meta.select(explode(col(s"`$hk`")).as("e"))
-        .select(
-          lit(hid).as("house_id"),
-          col("e.channel").cast("int").as("channel_n"),
-          col("e.appliance_raw_label").as("raw_label_meta"),
-          col("e.manufacturer").as("manufacturer"),
-          col("e.model").as("model"))
-    }.reduce(_ unionByName _)
-  }
-
   private def listHouseFiles(spark: SparkSession, path: String): Seq[(Int, String)] = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -87,8 +69,9 @@ object RefitSource {
         Seq(col("house_id")), col("ts"))
       .withColumn("rate_s", coalesce(col("rate_s"), lit(8L)))
 
-    val meta = metadata(spark, path)
-    val channels = narrow
+    val meta = HouseMetadata.read(spark,
+      s"$path/refit_appliance_metadata.json", "manufacturer", "model")
+    val channels = Labels.attachUniversal(narrow
       .select("house_id", "channel_n", "col_name").distinct()
       .join(broadcast(meta), Seq("house_id", "channel_n"), "left")
       .join(broadcast(houseRates.select("house_id", "rate_s")), Seq("house_id"))
@@ -96,13 +79,14 @@ object RefitSource {
       // else the trimmed column name (REFITLoader.py:68-75)
       .withColumn("raw_label",
         when(lower(col("col_name")).startsWith("aggregate"), "aggregate")
-          .otherwise(coalesce(col("raw_label_meta"), trim(col("col_name")))))
+          .otherwise(coalesce(col("raw_label_meta"), trim(col("col_name"))))),
+        "raw_label")
       .select(
         lit("refit").as("dataset"),
         col("house_id"),
         concat(lit("channel_"), col("channel_n")).as("channel_id"),
         col("raw_label"),
-        Labels.universalLabel(col("raw_label")).as("universal_label"),
+        col("universal_label"),
         lit("watts").as("unit"),
         lit("active").as("data_type"),
         col("rate_s").as("sample_rate_s"),

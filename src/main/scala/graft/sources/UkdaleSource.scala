@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.nilm.{Labels, NilmDataset}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** S1/S5/J2/J3/F3/F4/P9: the UK-DALE raw layout — per-channel
@@ -32,27 +32,6 @@ object UkdaleSource {
 
   private val deviceDataType = DevicePowerTypes.map { case (k, v) => k -> v._1 }
   private val deviceUnit = DevicePowerTypes.map { case (k, v) => k -> v._2 }
-
-  /** Combined metadata JSON → house/channel rows. The JSON's top-level
-    * keys are dynamic (`"House N"`), so the (dim-sized) schema is
-    * introspected driver-side and exploded per house
-    * (`UKDALELoader.py:39-58`). */
-  def metadata(spark: SparkSession, path: String): DataFrame = {
-    val meta = spark.read.option("multiLine", value = true)
-      .json(s"$path/metadata/ukdale_combined_metadata.json")
-    val houses = meta.schema.fieldNames.filter(_.startsWith("House "))
-    houses.map { hk =>
-      val hid = hk.stripPrefix("House ").trim.toInt
-      meta.select(explode(col(s"`$hk`")).as("e"))
-        .select(
-          lit(hid).as("house_id"),
-          col("e.channel").cast("int").as("channel_n"),
-          col("e.appliance_raw_label").as("raw_label_meta"),
-          col("e.manufacturer").as("manufacturer"),
-          col("e.model").as("model"),
-          col("e.acquisition_device").as("acquisition_device"))
-    }.reduce(_ unionByName _)
-  }
 
   /** Full load: raw tree → canonical NilmDataset. */
   def load(spark: SparkSession, path: String): NilmDataset = {
@@ -85,20 +64,22 @@ object UkdaleSource {
     val rates = Rates.inferPerKey(raw,
       Seq(col("house_id"), col("channel_n")), col("ts"))
 
-    val meta = metadata(spark, path)
-    val channels = rates
+    val meta = HouseMetadata.read(spark,
+      s"$path/metadata/ukdale_combined_metadata.json",
+      "manufacturer", "model", "acquisition_device")
+    val channels = Labels.attachUniversal(rates
       .join(broadcast(meta), Seq("house_id", "channel_n"), "left")
       .withColumn("raw_label",
         coalesce(col("raw_label_meta"),
           concat(lit("channel_"), col("channel_n"))))
       .withColumn("acquisition_device",
-        coalesce(col("acquisition_device"), lit("Unknown")))
+        coalesce(col("acquisition_device"), lit("Unknown"))), "raw_label")
       .select(
         lit("ukdale").as("dataset"),
         col("house_id"),
         concat(lit("channel_"), col("channel_n")).as("channel_id"),
         col("raw_label"),
-        Labels.universalLabel(col("raw_label")).as("universal_label"),
+        col("universal_label"),
         coalesce(element_at(typedlit(deviceUnit), col("acquisition_device")),
           lit("unknown")).as("unit"),
         coalesce(element_at(typedlit(deviceDataType), col("acquisition_device")),

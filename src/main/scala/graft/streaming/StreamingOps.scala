@@ -366,7 +366,7 @@ object StreamingOps {
     * product-encoder state round-trip — the operator's state is the
     * key plus one expiry timestamp, managed natively — so this is the
     * throughput ceiling for the stateful side (measured:
-    * StreamingBench `dedup_near_ww` arm, SCALE.md round 12).
+    * `ScaleBench streaming` `dedup_near_ww` arm, SCALE.md round 12).
     *
     * Semantic differences vs [[dedupDocsNear]] — why BOTH ship:
     * the dedup horizon here IS the input's watermark delay (a corpus

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print a query's physical plan (and optionally the AQE final
   * plan after execution) for plan-pin authoring.
@@ -9,14 +8,7 @@ object PrintPlan {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.register(spark)
+    val spark = graft.Session.local(2, 2)
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     if (args.length > 2 && args(2) == "exec") df.collect()
     println("PLANSTART")

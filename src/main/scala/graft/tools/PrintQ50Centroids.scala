@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.ext.VectorKMeans
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Regenerates the centroid literal block embedded in q50's DuckDB
@@ -17,13 +16,7 @@ import org.apache.spark.sql.functions._
 object PrintQ50Centroids {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8, 32)
     val e = graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
     val model = VectorKMeans.fit(e, "vec_id", "emb", k = 8, iters = 2,

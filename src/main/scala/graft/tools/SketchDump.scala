@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.ext.Sketches
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dumps the engine's sketch ESTIMATES (HLL distinct, KLL quantiles,
@@ -33,14 +32,7 @@ object SketchDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("/tmp/sketch_dump")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.register(spark)
+    val spark = graft.Session.local(8, 32)
 
     val docs = graft.Tables.documents(spark, sfDir)
     // (source, doc_id, sh): 3-word shingles of the cleaned token list

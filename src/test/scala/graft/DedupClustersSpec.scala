@@ -24,6 +24,23 @@ class DedupClustersSpec extends SparkSpec {
       5L -> 5L, 6L -> 6L, 7L -> 6L, 8L -> 8L))
   }
 
+  test("driver union-find labels every node of a path-compressed graph") {
+    // find()'s path compression rewrites parent entries; labelling by
+    // iterating the live map skipped keys, which came back as their own
+    // cluster_rep (a fuzzed case that failed before the key snapshot)
+    val edges = Seq((8L, 9L), (8L, 3L), (16L, 6L), (19L, 20L), (16L, 2L),
+      (1L, 21L), (24L, 15L), (7L, 24L), (15L, 0L), (9L, 19L), (2L, 6L))
+    val got = DedupClusters.connectedComponents((0L to 24L).toDF("doc_id"),
+        "doc_id", edges.toDF("a_id", "b_id"))
+      .as[(Long, Long)].collect().toMap
+    Caching.release()
+    val reps = Map(3L -> Seq(3L, 8L, 9L, 19L, 20L), 2L -> Seq(2L, 6L, 16L),
+      1L -> Seq(1L, 21L), 0L -> Seq(0L, 7L, 15L, 24L))
+    val want = (0L to 24L).map(i => i -> i).toMap ++
+      reps.flatMap { case (r, ns) => ns.map(_ -> r) }
+    assert(got == want)
+  }
+
   test("distributed propagation path agrees with driver union-find") {
     val docs = (1L to 8L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (6L, 7L))
@@ -109,13 +126,23 @@ class DedupClustersSpec extends SparkSpec {
       }
       lab.toMap
     }
-    val gen = for {
-      n <- Gen.choose(2L, 20L)
-      nEdges <- Gen.choose(0, 25)
+    def gen(maxN: Long, maxEdges: Int) = for {
+      n <- Gen.choose(2L, maxN)
+      nEdges <- Gen.choose(0, maxEdges)
       edges <- Gen.listOfN(nEdges,
         Gen.zip(Gen.choose(1L, n), Gen.choose(1L, n)))
     } yield (n, edges.filter(e => e._1 != e._2))
-    val prop = Prop.forAll(gen) { case (n, es) =>
+    // the driver union-find alone, on many graphs (pure Scala, no
+    // Spark job per case): path-compression bugs need a few hundred
+    // graphs of this size to show
+    val drvProp = Prop.forAll(gen(40L, 60)) { case (n, es) =>
+      val uf = DedupClusters.unionFind(es.toArray)
+      naive(n, es) == (1L to n).map(i => i -> uf.getOrElse(i, i)).toMap
+    }
+    val drvRes = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(3000), drvProp)
+    assert(drvRes.passed, drvRes.status.toString)
+    val prop = Prop.forAll(gen(30L, 40)) { case (n, es) =>
       val docs = (1L to n).toDF("doc_id")
       val pairs = if (es.isEmpty) Seq((1L, 1L)).toDF("a_id", "b_id").limit(0)
         else es.toDF("a_id", "b_id")

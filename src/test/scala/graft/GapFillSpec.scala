@@ -76,7 +76,7 @@ class GapFillSpec extends SparkSpec {
     // both fills are RUNNING (unboundedPreceding..currentRow) frames —
     // the forward direction rides a DESC sort of the same partition.
     // An unboundedFollowing frame here re-scans the remaining rows per
-    // row (O(n²) per key): PackScaleBench round 20 measured q101 at
+    // row (O(n²) per key): `ScaleBench pack` round 20 measured q101 at
     // ×13 time for ×4 data on exactly that plan before this shape.
     assert(p.contains("unboundedpreceding$(), currentrow$()"), p)
     assert(!p.toLowerCase.contains("unboundedfollowing"),

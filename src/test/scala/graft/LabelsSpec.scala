@@ -70,17 +70,6 @@ class LabelsSpec extends SparkSpec {
       assert(attached(i.toLong) == Labels.mapLabel(s), s"label '$s'")
     }
   }
-
-  test("Column expression agrees with the Scala mapper") {
-    import spark.implicits._
-    val samples = NilmLabelSamples.all
-    val got = samples.toDF("raw")
-      .select($"raw", Labels.universalLabel($"raw").as("ul"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    samples.foreach { s =>
-      assert(got(s) == Labels.mapLabel(s), s"expression vs scala for '$s'")
-    }
-  }
 }
 
 object NilmLabelSamples {

@@ -435,7 +435,7 @@ class PlanInvariantsSpec extends SparkSpec {
     // the type/user filters must reach the scan; the interpolation
     // fills are asc+desc RUNNING frames (two Window nodes, one
     // exchange) — an unboundedFollowing frame is the O(n²)-per-key
-    // shape PackScaleBench round 20 caught on this query (GapFillSpec
+    // shape `ScaleBench pack` round 20 caught on this query (GapFillSpec
     // pins the same on the operator); nothing goes cartesian
     assert(p.contains("PushedFilters: ["), p)
     assert(!p.toLowerCase.contains("unboundedfollowing"), p)

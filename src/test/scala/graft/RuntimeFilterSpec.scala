@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * Thresholds are scaled to local fixture sizes exactly as a 100 TB
   * deployment leaves them at defaults (the application side must look
   * expensive enough to be worth protecting: default 10 GB scan
-  * threshold → 0 here, same approach as JoinSkewBench's skew
+  * threshold → 0 here, same approach as `ScaleBench joinskew`'s skew
   * thresholds); broadcast is disabled because a broadcast hash join
   * already gets its filtering for free on the small side — the runtime
   * filter exists for the genuinely-shuffling joins a 100 TB fact table

@@ -91,6 +91,23 @@ class SourcesSpec extends SparkSpec {
       Seq("dataset", "house_id", "channel_id", "ts", "power"))
   }
 
+  test("channels: one row per read channel, canonical columns, both sources") {
+    // the universal label is attached by an inner join on raw_label; a
+    // null raw_label would drop its channel, so every channel present
+    // in the readings must come back exactly once
+    val canonical = Seq("dataset", "house_id", "channel_id", "raw_label",
+      "universal_label", "unit", "data_type", "sample_rate_s",
+      "manufacturer", "model", "acquisition_device")
+    for ((ds, channels) <- Seq(
+        UkdaleSource.load(spark, fixture("ukdale")) -> 4L,
+        RefitSource.load(spark, fixture("refit")) -> 5L)) {
+      assert(ds.channels.columns.toSeq == canonical)
+      assert(ds.channels.count() == channels)
+      assert(ds.channels.select("house_id", "channel_id").distinct().count() == channels)
+      assert(ds.readings.select("house_id", "channel_id").distinct().count() == channels)
+    }
+  }
+
   test("MQTT: json-lines parse skips malformed, averages duplicates") {
     val out = MqttSource.load(spark, fixture("mqtt") + "/mqtt.log.*")
       .orderBy("device", "ts")

@@ -741,7 +741,7 @@ class TextOpsSpec extends SparkSpec {
   test("multi-probe lsh: strict candidate superset of the exact bucket") {
     // recall@k monotonicity follows from candidate-set containment, so
     // the q82-beats-q28 recall claim is pinned structurally here (the
-    // measured recall numbers live in SCALE.md via AnnRecallBench);
+    // measured recall numbers live in SCALE.md via `ScaleBench ann`);
     // strictness checks the Hamming-1 probes actually reach buckets
     // the exact path can't
     val dir = "/root/testdata/sf0.001"
@@ -853,7 +853,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("prefix candidates grow sublinearly vs all-pairs (planted-dup corpus)") {
     // round-8 verdict #4's spec half, on the SAME deterministic
-    // generator DedupScaleBench measures (10% planted near-dups; every
+    // generator `ScaleBench dedup` measures (10% planted near-dups; every
     // doc OPENS with one of 20 boilerplate runs, so each opening
     // shingle has df ≈ n/20): doubling the corpus quadruples
     // all-pairs but must grow PPJoin candidates ~linearly (planted
@@ -861,7 +861,7 @@ class TextOpsSpec extends SparkSpec {
     // is rare). The measured curve at bench scale lives in SCALE.md;
     // this pins the shape so a prefix-ordering regression fails CI.
     def cands(n: Long): Long = {
-      val sets = TextOps.shingleSets(DedupScaleBench.corpus(spark, n),
+      val sets = TextOps.shingleSets(graft.scale.TextBenches.corpus(spark, n),
         "doc_id", "text", TextOps.ShingleK)
       val c = TextOps.prefixCandidates(sets, "doc_id", 8, 10, None).count()
       Caching.release()

@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
-# Full engine-side gate battery (round-18): ScalaTest suite, oracle
-# compare, shuffle-partition determinism, input-layout invariance, and
-# the independent sketch cross-check, at one scale factor.
+# Full engine-side gate battery (round-18): ScalaTest suite and the
+# benchmark's own logic tests (perfbench/tests), oracle compare,
+# shuffle-partition determinism, input-layout invariance, and the
+# independent sketch cross-check, at one scale factor.
 #
 # Usage: tools/gates.sh [sfDir]          (default /root/testdata/sf0.01)
 # For non-sf0.01 dirs the q50 oracle centroids are refit automatically
@@ -13,10 +14,13 @@ cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 OUT="$(mktemp -d /tmp/graft_gates.XXXXXX)"
 
-echo "[gates] 0/6 scalatest suite"
+echo "[gates] 0/6 scalatest suite + benchmark logic tests"
 sbt -batch test > "$OUT/suite.log" 2>&1 ||
   { grep -E "FAILED|\*\*\*" "$OUT/suite.log" | head -20; tail -5 "$OUT/suite.log"; exit 1; }
 grep -hE "Tests: succeeded" "$OUT/suite.log" | tail -1
+python3 -m unittest discover -s perfbench/tests > "$OUT/perfbench.log" 2>&1 ||
+  { tail -20 "$OUT/perfbench.log"; exit 1; }
+tail -3 "$OUT/perfbench.log" | head -1
 
 if [ "$SF" != "/root/testdata/sf0.01" ]; then
   echo "[gates] refitting q50 centroids for $SF"
