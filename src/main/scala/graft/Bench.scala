@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric","value","unit","queries","sf"}.
   *
@@ -40,6 +42,19 @@ object Bench {
       .find(_.length <= budget).getOrElse(mk(withMeds = false))
   }
 
+  /** Seconds of one cache-cold run of `fn`: build plus `collect()`,
+    * nothing else. A failing or leaking query must be VISIBLE — a
+    * stderr line and stack trace — and encodes as -1, never a timing
+    * (a leaked persist would time warm state). */
+  private[graft] def runOnce(spark: SparkSession, sfDir: String,
+      name: String, fn: (SparkSession, String) => DataFrame): Double =
+    try PackRun.coldRun(spark, name)(ScaleBench.secs(fn(spark, sfDir).collect()))
+    catch { case t: Throwable =>
+      System.err.println(s"[bench] $name FAILED: $t")
+      t.printStackTrace()
+      -1.0
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Session.cpus(32)
@@ -47,30 +62,13 @@ object Bench {
 
     // optional comma-separated subset for local iteration; entries
     // match by prefix so both q26 and q26_jaccard_pairs select it
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.exists(n.startsWith)))
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(o => PackRun.prefixes(Seq(o)))
+    val names = PackRun.select(only.getOrElse(Nil))
     only.filter(_ => names.isEmpty).foreach { o =>
-      System.err.println(s"[bench] SPARK_GRAFT_BENCH_ONLY=$o matched no query")
+      System.err.println(s"[bench] SPARK_GRAFT_BENCH_ONLY=${o.mkString(",")} matched no query")
     }
-    def runOnce(name: String): Double = {
-      // persist()ed intermediates from a previous run would satisfy this
-      // run's structurally-equal plans via the CacheManager, silently
-      // timing warm-cache cost — every run starts cache-cold
-      Caching.release()
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      try { SparkEntry.queries(name)(spark, sfDir).collect() }
-      catch {
-        // a failing query must be VISIBLE, not a silent -1 in the medians
-        case t: Throwable =>
-          System.err.println(s"[bench] $name FAILED: $t")
-          t.printStackTrace()
-          return -1.0
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
+    def runOnce(name: String): Double =
+      Bench.runOnce(spark, sfDir, name, SparkEntry.queries(name))
     // host-load telemetry: the driver's official runs have repeatedly been
     // inflated by background load on the shared host; recording loadavg
     // before/after lets a reader discount a noisy run without re-running

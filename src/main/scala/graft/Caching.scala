@@ -16,7 +16,7 @@ import org.apache.spark.storage.StorageLevel
   *   2. the CALLER invokes [[release]] once after the terminal action
   *      (collect/write) of the query it built.
   *
-  * [[Verify]] and [[Bench]] do this after every query; a long-lived
+  * [[PackRun.coldRun]] does this around every pack query; a long-lived
   * session that skips release merely falls back to LRU eviction (the
   * pre-registry behavior), it never gets wrong results. Thread-safe.
   */

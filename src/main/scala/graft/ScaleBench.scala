@@ -169,11 +169,14 @@ object ScaleBench {
     * sizes write tens of GB). */
   def withTempDir[A](prefix: String)(body: String => A): A = {
     val dir = java.nio.file.Files.createTempDirectory(prefix)
-    def rm(f: java.io.File): Unit = {
-      if (!java.nio.file.Files.isSymbolicLink(f.toPath))
-        Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    try body(dir.toString) finally rm(dir.toFile)
+    try body(dir.toString) finally deleteTree(dir.toFile)
+  }
+
+  /** Delete `f` and everything under it; symlinks are removed, never
+    * followed. */
+  def deleteTree(f: java.io.File): Unit = {
+    if (!java.nio.file.Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete(): Unit
   }
 }

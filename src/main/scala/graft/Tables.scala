@@ -46,9 +46,9 @@ object Tables {
     * data: nothing is persisted, every action still scans the parquet
     * (the bench's cache-cold contract is about query RESULTS, and its
     * own warm-up pass explicitly names the parquet footer cache as
-    * intended warm state). Guarded by the path's mtime so a rewrite
-    * (LayoutInvarianceCheck rebuilds layouts in place between legs)
-    * re-resolves; keyed per session so concurrent sessions resolve
+    * intended warm state). Guarded by the path's mtime so an in-place
+    * rewrite (a layout rebuilt over an earlier one, as in the specs'
+    * fixtures) re-resolves; keyed per session so concurrent sessions resolve
     * independently. */
   private val relationCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String), (Long, DataFrame)]()

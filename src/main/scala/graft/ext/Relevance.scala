@@ -34,9 +34,9 @@ object Relevance {
     *
     * The doc-frequency frame derives from the tf frame (one extra
     * map-side-combinable agg), and N joins in as a broadcast one-row
-    * count. Ranking uses the string-keyed bounded-buffer top-k
-    * aggregate (`graft_topk_str`, [[graft.functions.TopKByScoreStr]];
-    * register via [[graft.plans.GraftExtensions]]) — the row_number
+    * count. Ranking is [[TextOps.topKPerGroup]] with the term as a
+    * string id (the bounded-buffer top-k aggregate; register via
+    * [[graft.plans.GraftExtensions]]) — the row_number
     * window form it replaces re-shuffles and SORTS every scored
     * (doc, term) row, while the aggregate's map-side partial keeps at
     * most k rows per document per task before the exchange.
@@ -51,14 +51,9 @@ object Relevance {
       .join(broadcast(n))
       .withColumn("tfidf",
         col("tf") * (log((col("__n") + 1).cast("double") / (col("df") + 1)) + 1))
-    scored.groupBy(col(idCol))
-      .agg(call_function("graft_topk_str",
-        col("tfidf"), col("term"), lit(k)).as("__topk"))
-      .select(col(idCol), posexplode(col("__topk")).as(Seq("__pos", "__e")))
-      .select(col(idCol),
-        col("__e.id").as("term"),
-        (col("__pos") + 1).cast("long").as("rank"),
-        col("__e.score").as("tfidf"))
+    TextOps.topKPerGroup(scored, Seq(idCol), col("tfidf"), col("term"), k)
+      .select(col(idCol), col("id").as("term"), col("rank"),
+        col("score").as("tfidf"))
   }
 
   /** Okapi BM25 retrieval score of every document containing at least

@@ -490,6 +490,7 @@ object TextOps {
     * per task before the exchange. Row-identical to the window form
     * (ties break toward the smaller id; parity-tested).
     *
+    * `id` is a bigint or string column.
     * Output: group columns + `id`, `rank` (1-based long), `score`. */
   def topKPerGroup(df: org.apache.spark.sql.DataFrame, groupCols: Seq[String],
                    score: Column, id: Column, k: Int): org.apache.spark.sql.DataFrame =

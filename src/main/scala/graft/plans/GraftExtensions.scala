@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.{BloomAgg, BloomMightContain, ByteGridFp, ByteHistogram, CharEntropy, DotProduct, HeavyHitters, JpegSofDims, JsonLongKey, KllAgg, KllMergeAgg, KllQuantile, KllRank, MinHashSig, NearestCentroid, RollingFingerprint, ShingleRows, ShingleSet, SimHash60, ThetaAgg, ThetaAnotBEstimate, ThetaEstimate, ThetaIntersectEstimate, ThetaUnionAgg, ThetaUnionEstimate, TopKByScore, TopKByScoreStr, ZOrderKey}
+import graft.functions.{BloomAgg, BloomMightContain, ByteGridFp, ByteHistogram, CharEntropy, DotProduct, HeavyHitters, JpegSofDims, JsonLongKey, KllAgg, KllMergeAgg, KllQuantile, KllRank, MinHashSig, NearestCentroid, RollingFingerprint, ShingleRows, ShingleSet, SimHash60, ThetaAgg, ThetaAnotBEstimate, ThetaEstimate, ThetaIntersectEstimate, ThetaUnionAgg, ThetaUnionEstimate, TopKByScore, ZOrderKey}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -107,12 +107,6 @@ object GraftExtensions {
       (args: Seq[Expression]) => {
         require(args.size == 1, "graft_shingle_rows(str)")
         ShingleRows(args.head)
-      }),
-    (FunctionIdentifier("graft_topk_str"),
-      new ExpressionInfo(classOf[TopKByScoreStr].getName, "graft_topk_str"),
-      (args: Seq[Expression]) => {
-        require(args.size == 3, "graft_topk_str(score, id, k)")
-        TopKByScoreStr(args.head, args(1), args(2)).toAggregateExpression()
       }),
     (FunctionIdentifier("graft_json_long"),
       new ExpressionInfo(classOf[JsonLongKey].getName, "graft_json_long"),

@@ -2335,7 +2335,7 @@ object DocumentQueries {
     // Per-source characteristic terms: top-5 words per source by term
     // frequency — the corpus-profiling sibling of q62's global vocab
     // (per-SOURCE profiles drive mixture weighting and blocklists).
-    // Ranking is graft_topk_str's map-side bounded buffer (≤5 rows per
+    // Ranking is graft_topk's map-side bounded buffer (≤5 rows per
     // source per task cross the exchange), never a per-source
     // row_number sort over the full (source, term) frame.
     "q110_source_top_terms" -> ((s, d) => {
@@ -2344,13 +2344,9 @@ object DocumentQueries {
       val tf = documents(s, d)
         .select($"source", explode(TextOps.words($"text")).as("term"))
         .groupBy($"source", $"term").agg(count(lit(1)).as("tf"))
-      tf.groupBy($"source")
-        .agg(call_function("graft_topk_str",
-          $"tf".cast("double"), $"term", lit(5)).as("__topk"))
-        .select($"source", posexplode($"__topk").as(Seq("__pos", "__e")))
-        .select($"source", $"__e.id".as("term"),
-          ($"__pos" + 1).cast("long").as("rank"),
-          $"__e.score".cast("long").as("tf"))
+      topKPerGroup(tf, Seq("source"), $"tf".cast("double"), $"term", 5)
+        .select($"source", $"id".as("term"), $"rank",
+          $"score".cast("long").as("tf"))
         .orderBy($"source", $"rank")
     }),
 

@@ -487,7 +487,7 @@ object RelationalQueries {
     // merchandising review runs ("which words sell"). The fact table
     // collapses FIRST (per-part revenue, map-side combinable), the
     // token explode runs over the part dim, and the global top-20 is
-    // graft_topk_str's map-side bounded buffer (≤20 rows per task
+    // graft_topk's map-side bounded buffer (≤20 rows per task
     // reach the driver-side final) — never a vocabulary sort. Cents
     // ride exactly through the double score (< 2⁵³), cast back
     // losslessly; ties break token-ascending (deterministic).
@@ -502,7 +502,7 @@ object RelationalQueries {
         .select($"p_partkey", explode(split($"p_name", " ")).as("token"))
         .join(rev, $"p_partkey" === $"l_partkey")
         .groupBy($"token").agg(sum($"pc").as("tc"))
-        .agg(call_function("graft_topk_str",
+        .agg(call_function("graft_topk",
           $"tc".cast("double"), $"token", lit(20)).as("tk"))
         .select(posexplode($"tk").as(Seq("__pos", "__e")))
         .select(($"__pos" + 1).cast("long").as("rank"),

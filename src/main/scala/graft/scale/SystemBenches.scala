@@ -3,7 +3,7 @@ package graft.scale
 import java.io.{BufferedWriter, FileWriter}
 import java.nio.file.{Files, Path, Paths}
 
-import graft.{Caching, SparkEntry, Tables}
+import graft.{Caching, PackRun, SparkEntry, Tables}
 import graft.ScaleBench._
 import graft.ext.{Quantize, TextOps, VectorKMeans}
 import graft.sources.{Container, RefitSource, UkdaleSource}
@@ -140,11 +140,10 @@ object SystemBenches {
       Seq("metric", "scales") ++ PackQueries),
     (ctx, r) => {
       val spark = ctx.spark
-      def runOnce(name: String, dir: String): (Long, Double) = {
-        Caching.release(); spark.catalog.clearCache()
-        timed(SparkEntry.queries(name)(spark, dir).collect().length.toLong)
-      }
-      def measure(dir: String) = PackQueries.map { q =>
+      def runOnce(name: String, dir: String): (Long, Double) =
+        PackRun.coldRun(spark, name)(
+          timed(SparkEntry.queries(name)(spark, dir).collect().length.toLong))
+      def measure(dir: String) = PackRun.select(PackQueries).map { q =>
         runOnce(q, dir) // warm-up (JIT + file listing), untimed
         val samples = (1 to 3).map(_ => runOnce(q, dir))
         val (med, lo, hi) = medianSpread(samples.map(_._2))

@@ -18,7 +18,7 @@ class GlobalAggSpec extends SparkSpec {
     ($"id" % 977).as("v"))
 
   private def deepGlobals(d: org.apache.spark.sql.DataFrame) =
-    graft.tools.GlobalWindowCensus.deepGlobals(d.queryExecution.executedPlan)
+    PlanInvariantsSpec.deepWindows(d).filter(_.partitionSpec.isEmpty)
 
   test("withScalars matches the global-window form") {
     val viaWindow = df

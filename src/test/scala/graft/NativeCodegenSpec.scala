@@ -125,7 +125,7 @@ class NativeCodegenSpec extends SparkSpec {
       .groupBy($"g")
       .agg(
         call_function("graft_topk", $"id".cast("double"), $"id", lit(2)).as("topk"),
-        call_function("graft_topk_str", $"id".cast("double"), $"text", lit(2)).as("topks"),
+        call_function("graft_topk", $"id".cast("double"), $"text", lit(2)).as("topks"),
         call_function("graft_heavy_hitters", $"text", lit(4)).as("hh"),
         hex(call_function("graft_bloom", $"text", lit(100L), lit(0.01))).as("bloom"),
         call_function("graft_kll_quantile",

@@ -10,6 +10,7 @@ package graft
   * bounds).
   */
 class PlanInvariantsSpec extends SparkSpec {
+  import PlanInvariantsSpec.deepWindows
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -39,28 +40,6 @@ class PlanInvariantsSpec extends SparkSpec {
 
   private def countOf(s: String, needle: String): Int =
     s.sliding(needle.length).count(_ == needle)
-
-  /** Every WindowExec reachable from the df's executed plan, descending
-    * through AQE wrappers (a leaf to a naive collect), materialized
-    * query stages, and cached-plan bodies (InMemoryRelation trees a
-    * shallow collect never enters). */
-  private def deepWindows(df: org.apache.spark.sql.DataFrame)
-      : Seq[org.apache.spark.sql.execution.window.WindowExec] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.window.WindowExec
-    def walk(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.inputPlan)
-        case q: QueryStageExec        => Seq(q.plan)
-        case s: InMemoryTableScanExec => Seq(s.relation.cachedPlan)
-        case other                    => other.children
-      }
-      p +: kids.flatMap(walk)
-    }
-    walk(df.queryExecution.executedPlan).collect { case w: WindowExec => w }
-  }
 
   /** Drop cached-plan bodies (the innerChildren a printed
     * InMemoryRelation carries) so node counts see each EXECUTED operator
@@ -346,7 +325,7 @@ class PlanInvariantsSpec extends SparkSpec {
 
   test("q74 tfidf: string-keyed bounded ranking, no window sort") {
     val p = plan("q74_tfidf_topk")
-    assert(p.contains("graft_topk_str"), p)
+    assert(p.contains("graft_topk"), p)
     assert(!p.contains("Window"), p)
   }
 
@@ -515,7 +494,7 @@ class PlanInvariantsSpec extends SparkSpec {
   }
 
   test("q110 source top terms: bounded-buffer ranking, no window sort") {
-    // same contract as q74: graft_topk_str's map-side partial keeps ≤k
+    // same contract as q74: graft_topk's map-side partial keeps ≤k
     // rows per source per task; a row_number formulation would show
     // Window + a full per-source sort
     val p = plan("q110_source_top_terms")
@@ -1499,7 +1478,7 @@ class PlanInvariantsSpec extends SparkSpec {
     // top-20 is the partial top-k aggregate, never a vocabulary sort
     // (no rank window, no rangepartitioning of the token frame)
     val p = plan("q188_name_token_revenue")
-    assert(p.contains("graft_topk_str"), p)
+    assert(p.contains("graft_topk"), p)
     assert(!p.contains("Window"), p)
     assert(!p.contains("CartesianProduct"), p)
     assert(countOf(p, "Scan parquet") == 2, p)
@@ -1633,5 +1612,30 @@ class PlanInvariantsSpec extends SparkSpec {
     val seen = deepWindows(partitioned)
     assert(seen.nonEmpty && seen.forall(_.partitionSpec.nonEmpty),
       "partitioned windows must stay legal")
+  }
+}
+
+object PlanInvariantsSpec {
+
+  /** Every WindowExec reachable from the df's executed plan, descending
+    * through AQE wrappers (a leaf to a naive collect), materialized
+    * query stages, and cached-plan bodies (InMemoryRelation trees a
+    * shallow collect never enters). */
+  def deepWindows(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.window.WindowExec] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    def walk(p: SparkPlan): Seq[SparkPlan] = {
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.inputPlan)
+        case q: QueryStageExec        => Seq(q.plan)
+        case s: InMemoryTableScanExec => Seq(s.relation.cachedPlan)
+        case other                    => other.children
+      }
+      p +: kids.flatMap(walk)
+    }
+    walk(df.queryExecution.executedPlan).collect { case w: WindowExec => w }
   }
 }

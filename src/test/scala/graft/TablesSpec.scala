@@ -142,8 +142,8 @@ class TablesSpec extends SparkSpec {
     // per table), so table() memoizes the resolved logical relation
     // per (session, path) — metadata only, mtime-guarded. This pins
     // both halves: reuse while the path is untouched, and
-    // re-resolution after an in-place rewrite (the
-    // LayoutInvarianceCheck rebuild pattern).
+    // re-resolution after an in-place rewrite (a layout rebuilt over
+    // an earlier one at the same path).
     val dir = java.nio.file.Files.createTempDirectory("graft_tbl").toString
     spark.range(5).toDF("x").write.parquet(s"$dir/t.parquet")
     val a = Tables.table(spark, dir, "t")

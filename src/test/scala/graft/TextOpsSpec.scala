@@ -157,7 +157,7 @@ class TextOpsSpec extends SparkSpec {
     assert(all == 40)
   }
 
-  test("graft_topk_str equals the row_number window formulation (with ties)") {
+  test("topKPerGroup with string id equals the row_number window formulation (with ties)") {
     import org.apache.spark.sql.expressions.Window
     val rnd = new scala.util.Random(21)
     // small score set guarantees equal-score ties → the string tiebreak
@@ -166,11 +166,8 @@ class TextOpsSpec extends SparkSpec {
       yield (g.toLong, s"t${rnd.nextInt(999)}_$i", (rnd.nextInt(8) / 10.0))
     val df = rows.toDF("grp", "term", "score")
     for (k <- Seq(1, 3, 7)) {
-      val viaAgg = df.groupBy($"grp")
-        .agg(call_function("graft_topk_str", $"score", $"term", lit(k)).as("t"))
-        .select($"grp", posexplode($"t").as(Seq("p", "e")))
-        .select($"grp", $"e.id".as("term"),
-          ($"p" + 1).cast("long").as("rank"), $"e.score".as("score"))
+      val viaAgg = TextOps.topKPerGroup(df, Seq("grp"), $"score", $"term", k)
+        .select($"grp", $"id".as("term"), $"rank", $"score")
         .as[(Long, String, Long, Double)].collect().toSet
       val w = Window.partitionBy($"grp").orderBy($"score".desc, $"term")
       val viaWindow = df
@@ -207,37 +204,36 @@ class TextOpsSpec extends SparkSpec {
     }
   }
 
-  test("graft_topk / graft_topk_str reject malformed k at analysis") {
+  test("graft_topk rejects malformed k and a non-bigint/string id at analysis") {
     // round-7 advice: a foldable NON-numeric or null k must surface as
     // an AnalysisException (TypeCheckFailure), not a ClassCastException
-    // or NPE thrown from inside the analyzer
+    // or NPE thrown from inside the analyzer — for both id types
     val df = Seq((1.0, 1L, "a")).toDF("score", "id", "term")
     def analyzed(c: org.apache.spark.sql.Column): Unit =
       df.groupBy().agg(c).queryExecution.analyzed
-    for (bad <- Seq(lit("3"), lit(1.5), lit(null),
-        lit(null).cast("int"), lit(0), lit(-2))) {
-      intercept[org.apache.spark.sql.AnalysisException] {
-        analyzed(call_function("graft_topk", $"score", $"id", bad))
+    for (id <- Seq($"id", $"term")) {
+      for (bad <- Seq(lit("3"), lit(1.5), lit(null),
+          lit(null).cast("int"), lit(0), lit(-2))) {
+        intercept[org.apache.spark.sql.AnalysisException] {
+          analyzed(call_function("graft_topk", $"score", id, bad))
+        }
       }
-      intercept[org.apache.spark.sql.AnalysisException] {
-        analyzed(call_function("graft_topk_str", $"score", $"term", bad))
+      // bigint k is fine (column-literal promotion)...
+      analyzed(call_function("graft_topk", $"score", id, lit(3L)))
+      // ...but a bigint PAST Int range must fail analysis, not silently
+      // truncate through Number.intValue() (4294967301L → k=5)
+      // (round-8 advice)
+      for (big <- Seq(lit(4294967301L), lit(Long.MaxValue))) {
+        intercept[org.apache.spark.sql.AnalysisException] {
+          analyzed(call_function("graft_topk", $"score", id, big))
+        }
       }
     }
-    // bigint k is fine (column-literal promotion)...
-    analyzed(call_function("graft_topk", $"score", $"id", lit(3L)))
-    analyzed(call_function("graft_topk_str", $"score", $"term", lit(3L)))
-    // ...but a bigint PAST Int range must fail analysis, not silently
-    // truncate through Number.intValue() (4294967301L → k=5)
-    // (round-8 advice)
-    for (big <- Seq(lit(4294967301L), lit(Long.MaxValue))) {
-      intercept[org.apache.spark.sql.AnalysisException] {
-        analyzed(call_function("graft_topk", $"score", $"id", big))
-      }
-      intercept[org.apache.spark.sql.AnalysisException] {
-        analyzed(call_function("graft_topk_str", $"score", $"term", big))
-      }
+    intercept[org.apache.spark.sql.AnalysisException] {
+      analyzed(call_function("graft_topk", $"score", $"score", lit(3)))
     }
   }
+
 
   test("dot / l2norm / cosine basics") {
     val out = Seq((Seq(1.0, 2.0, 2.0), Seq(1.0, 2.0, 2.0)),
