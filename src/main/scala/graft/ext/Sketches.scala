@@ -3,9 +3,11 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Mergeable-sketch distinct counting (Apache DataSketches HLL via
-  * Spark's built-in `hll_sketch_agg` / `hll_union_agg` /
-  * `hll_sketch_estimate` — codegen'd TypedImperativeAggregates, no UDF).
+/** Mergeable sketches over Apache DataSketches, all through Spark's
+  * built-in functions (TypedImperativeAggregates, no UDF, nothing to
+  * register): HLL distinct counts (`hll_sketch_agg` / `hll_union_agg` /
+  * `hll_sketch_estimate`), KLL quantiles (`kll_*_double`) and theta
+  * set algebra (`theta_*`, bigint estimates).
   *
   * The 100 TB story this module exists for: a production corpus arrives
   * in shards, and "how many distinct tokens / users / urls" must not
@@ -73,15 +75,17 @@ object Sketches {
     shards.groupBy(groupCols.map(col): _*)
       .agg(hll_union_agg(col("sketch"), lit(false)).as("sketch"))
 
-  // ---- quantile sketches (DataSketches KLL via graft_kll natives) ----
+  // ---- quantile sketches (DataSketches KLL via Spark's kll_*_double) ----
   // Same ingest-once / rollup-bytes-forever shape as the HLL path, for
   // DISTRIBUTIONS instead of distinct counts: p50/p99 token counts,
   // quality-score CDFs, length histograms — per shard at ingest, then
-  // any coarser grouping without touching raw data. Requires
-  // [[graft.plans.GraftExtensions.register]]. Accuracy is KLL's
-  // normalized-rank bound (k=200 → ~1.65 % single-sided at 99 %
-  // confidence; merge follows the smallest k involved) and estimates
-  // are NOT run-deterministic — QuantileSketchSpec pins the band.
+  // any coarser grouping without touching raw data. Spark's
+  // approx_percentile sketch lives and dies inside one aggregation;
+  // these blobs persist. Accuracy is KLL's normalized-rank bound
+  // (k=200 → ~1.65 % single-sided at 99 % confidence; merge follows
+  // the smallest k involved) and estimates are NOT run-deterministic
+  // (compaction flips random coins) — QuantileSketchSpec pins the band.
+  // Nulls are skipped; quantile and rank reads are INCLUSIVE.
 
   val DefaultK = 200
 
@@ -90,33 +94,42 @@ object Sketches {
                             valueCol: String, shardCol: Column,
                             k: Int = DefaultK): DataFrame =
     df.groupBy(groupCols.map(col) :+ shardCol.as("shard"): _*)
-      .agg(call_function("graft_kll",
-        col(valueCol).cast("double"), lit(k)).as("qsketch"))
+      .agg(kll_sketch_agg_double(col(valueCol).cast("double"), k)
+        .as("qsketch"))
 
   /** Bytes-only rollup of persisted quantile sketches to any coarser
     * grouping, keeping the result a sketch (chainable). */
   def quantileUnionSketches(shards: DataFrame, groupCols: Seq[String],
                             k: Int = DefaultK): DataFrame =
     shards.groupBy(groupCols.map(col): _*)
-      .agg(call_function("graft_kll_merge",
-        col("qsketch"), lit(k)).as("qsketch"))
+      .agg(kll_merge_agg_double(col("qsketch"), k).as("qsketch"))
 
   /** Read estimates out of sketch rows: one column per requested
-    * quantile (`q50`, `q99`, …) — runs on aggregated rows only. */
+    * quantile (`q50`, `q99`, …) — runs on aggregated rows only. An
+    * empty sketch (every input null) reads NaN; quantiles whose column
+    * names collide (0.995 and 1.0 are both `q100`) are rejected. */
   def quantileEstimates(sketches: DataFrame,
-                        quantiles: Seq[Double]): DataFrame =
-    quantiles.foldLeft(sketches) { (df, q) =>
-      df.withColumn(s"q${(q * 100).round}",
-        call_function("graft_kll_quantile", col("qsketch"), lit(q)))
-    }.drop("qsketch")
+                        quantiles: Seq[Double]): DataFrame = {
+    val names = quantiles.map(q => s"q${(q * 100).round}")
+    require(names.distinct.size == names.size,
+      s"quantiles ${quantiles.mkString(", ")} collide in column names " +
+        names.mkString(", "))
+    val s = col("qsketch")
+    val estimates = names.zip(quantiles).map { case (name, q) =>
+      when(kll_sketch_get_n_double(s) === 0, lit(Double.NaN))
+        .otherwise(kll_sketch_get_quantile_double(s, lit(q))).as(name)
+    }
+    sketches.select(col("*") +: estimates: _*).drop("qsketch")
+  }
 
   // ---- theta sketches (set algebra on distinct counts) ----
   // The overlap/contamination-RATE question HLL cannot answer: per-slice
   // sketches at ingest, then |A∩B| / |A\B| / Jaccard for ANY pair of
   // slices as scalar math on KB blobs — never a join of raw corpora.
-  // Deterministic for fixed input + shard topology (k-min-hash, no
-  // random state); ThetaSketchSpec pins exactness below 2^lgK and the
-  // estimation-mode bands. Requires GraftExtensions.register.
+  // Spark's theta_* built-ins; estimates are bigint. Exact below 2^lgK
+  // retained entries, and deterministic for fixed input + shard
+  // topology (k-min-hash, no random state); ThetaSketchSpec pins
+  // exactness and the estimation-mode bands.
 
   val DefaultLgK = 12
 
@@ -125,35 +138,34 @@ object Sketches {
                          valueCol: String, shardCol: Column,
                          lgK: Int = DefaultLgK): DataFrame =
     df.groupBy(groupCols.map(col) :+ shardCol.as("shard"): _*)
-      .agg(call_function("graft_theta",
-        col(valueCol), lit(lgK)).as("tsketch"))
+      .agg(theta_sketch_agg(col(valueCol), lgK).as("tsketch"))
 
   /** Bytes-only union rollup to any coarser grouping (chainable). */
   def thetaUnionSketches(shards: DataFrame, groupCols: Seq[String],
                          lgK: Int = DefaultLgK): DataFrame =
     shards.groupBy(groupCols.map(col): _*)
-      .agg(call_function("graft_theta_union",
-        col("tsketch"), lit(lgK)).as("tsketch"))
+      .agg(theta_union_agg(col("tsketch"), lgK).as("tsketch"))
 
   /** Pairwise overlap report between two sketch frames (each one
     * `tsketch` row per key): per-side distinct, intersection,
-    * difference, and Jaccard — all from the blobs. The join carries
-    * only sketch rows (slices, not data), so an all-pairs overlap
-    * matrix over S slices is S² KB-sized rows. */
+    * difference (bigint estimates), and Jaccard (double) — all from the
+    * blobs, next to every non-sketch column of both sides. The join
+    * carries only sketch rows (slices, not data), so an all-pairs
+    * overlap matrix over S slices is S² KB-sized rows. */
   def thetaOverlap(a: DataFrame, b: DataFrame,
                    joinCols: Seq[String]): DataFrame = {
     val l = a.withColumnRenamed("tsketch", "ts_a")
     val r = b.withColumnRenamed("tsketch", "ts_b")
     val j = if (joinCols.isEmpty) l.crossJoin(r) else l.join(r, joinCols)
-    j.select(joinCols.map(col) ++ Seq(
-        call_function("graft_theta_estimate", col("ts_a")).as("est_a"),
-        call_function("graft_theta_estimate", col("ts_b")).as("est_b"),
-        call_function("graft_theta_intersect", col("ts_a"), col("ts_b"))
-          .as("est_overlap"),
-        call_function("graft_theta_anotb", col("ts_a"), col("ts_b"))
-          .as("est_only_a"),
-        (call_function("graft_theta_intersect", col("ts_a"), col("ts_b")) /
-          call_function("graft_theta_union_est", col("ts_a"), col("ts_b")))
-          .as("est_jaccard")): _*)
+    val (ta, tb) = (col("ts_a"), col("ts_b"))
+    val overlap = theta_sketch_estimate(theta_intersection(ta, tb))
+    j.select(col("*"),
+        theta_sketch_estimate(ta).as("est_a"),
+        theta_sketch_estimate(tb).as("est_b"),
+        overlap.as("est_overlap"),
+        theta_sketch_estimate(theta_difference(ta, tb)).as("est_only_a"),
+        (overlap / theta_sketch_estimate(theta_union(ta, tb)))
+          .as("est_jaccard"))
+      .drop("ts_a", "ts_b")
   }
 }

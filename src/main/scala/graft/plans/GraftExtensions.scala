@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.{BloomAgg, BloomMightContain, ByteGridFp, ByteHistogram, CharEntropy, DotProduct, HeavyHitters, JpegSofDims, JsonLongKey, KllAgg, KllMergeAgg, KllQuantile, KllRank, MinHashSig, NearestCentroid, RollingFingerprint, ShingleRows, ShingleSet, SimHash60, ThetaAgg, ThetaAnotBEstimate, ThetaEstimate, ThetaIntersectEstimate, ThetaUnionAgg, ThetaUnionEstimate, TopKByScore, ZOrderKey}
+import graft.functions.{BloomAgg, BloomMightContain, ByteGridFp, ByteHistogram, CharEntropy, DotProduct, HeavyHitters, JpegSofDims, JsonLongKey, MinHashSig, NearestCentroid, RollingFingerprint, ShingleRows, ShingleSet, SimHash60, TopKByScore, ZOrderKey}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -126,66 +126,6 @@ object GraftExtensions {
         require(args.size >= 4 && args.size % 2 == 0,
           "graft_zorder(v1, cuts1, v2, cuts2, ...)")
         ZOrderKey(args)
-      }),
-    (FunctionIdentifier("graft_kll"),
-      new ExpressionInfo(classOf[KllAgg].getName, "graft_kll"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_kll(value, k)")
-        KllAgg(args.head, args(1)).toAggregateExpression()
-      }),
-    (FunctionIdentifier("graft_kll_merge"),
-      new ExpressionInfo(classOf[KllMergeAgg].getName, "graft_kll_merge"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_kll_merge(sketch, k)")
-        KllMergeAgg(args.head, args(1)).toAggregateExpression()
-      }),
-    (FunctionIdentifier("graft_kll_quantile"),
-      new ExpressionInfo(classOf[KllQuantile].getName, "graft_kll_quantile"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_kll_quantile(sketch, q)")
-        KllQuantile(args.head, args(1))
-      }),
-    (FunctionIdentifier("graft_kll_rank"),
-      new ExpressionInfo(classOf[KllRank].getName, "graft_kll_rank"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_kll_rank(sketch, value)")
-        KllRank(args.head, args(1))
-      }),
-    (FunctionIdentifier("graft_theta"),
-      new ExpressionInfo(classOf[ThetaAgg].getName, "graft_theta"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_theta(item, lgK)")
-        ThetaAgg(args.head, args(1)).toAggregateExpression()
-      }),
-    (FunctionIdentifier("graft_theta_union"),
-      new ExpressionInfo(classOf[ThetaUnionAgg].getName, "graft_theta_union"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_theta_union(sketch, lgK)")
-        ThetaUnionAgg(args.head, args(1)).toAggregateExpression()
-      }),
-    (FunctionIdentifier("graft_theta_estimate"),
-      new ExpressionInfo(classOf[ThetaEstimate].getName, "graft_theta_estimate"),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, "graft_theta_estimate(sketch)")
-        ThetaEstimate(args.head)
-      }),
-    (FunctionIdentifier("graft_theta_intersect"),
-      new ExpressionInfo(classOf[ThetaIntersectEstimate].getName, "graft_theta_intersect"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_theta_intersect(a, b)")
-        ThetaIntersectEstimate(args.head, args(1))
-      }),
-    (FunctionIdentifier("graft_theta_anotb"),
-      new ExpressionInfo(classOf[ThetaAnotBEstimate].getName, "graft_theta_anotb"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_theta_anotb(a, b)")
-        ThetaAnotBEstimate(args.head, args(1))
-      }),
-    (FunctionIdentifier("graft_theta_union_est"),
-      new ExpressionInfo(classOf[ThetaUnionEstimate].getName, "graft_theta_union_est"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "graft_theta_union_est(a, b)")
-        ThetaUnionEstimate(args.head, args(1))
       }))
 
   /** Idempotent runtime registration into an existing session. */

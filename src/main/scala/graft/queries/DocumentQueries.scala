@@ -2059,24 +2059,21 @@ object DocumentQueries {
     // exist.
     "q94_theta_overlap" -> ((s, d) => {
       import s.implicits._
-      graft.plans.GraftExtensions.register(s)
       val toks = documents(s, d).select($"source",
           explode(TextOps.words($"text")).as("tok"))
         .filter(length($"tok") > 0)
       val sk = toks.groupBy($"source")
-        .agg(call_function("graft_theta", $"tok", lit(14)).as("tsketch"))
+        .agg(theta_sketch_agg($"tok", 14).as("tsketch"))
       val a = sk.select($"source".as("source_a"), $"tsketch".as("ts_a"))
       val b = sk.select($"source".as("source_b"), $"tsketch".as("ts_b"))
       a.join(b, $"source_a" < $"source_b")
         .select($"source_a", $"source_b",
-          round(call_function("graft_theta_estimate", $"ts_a"))
-            .cast("long").as("n_a"),
-          round(call_function("graft_theta_estimate", $"ts_b"))
-            .cast("long").as("n_b"),
-          round(call_function("graft_theta_intersect", $"ts_a", $"ts_b"))
-            .cast("long").as("n_overlap"),
-          round(call_function("graft_theta_anotb", $"ts_a", $"ts_b"))
-            .cast("long").as("n_only_a"))
+          theta_sketch_estimate($"ts_a").as("n_a"),
+          theta_sketch_estimate($"ts_b").as("n_b"),
+          theta_sketch_estimate(theta_intersection($"ts_a", $"ts_b"))
+            .as("n_overlap"),
+          theta_sketch_estimate(theta_difference($"ts_a", $"ts_b"))
+            .as("n_only_a"))
         .orderBy($"source_a", $"source_b")
     }),
 

@@ -79,19 +79,10 @@ object SketchDump {
       Sketches.thetaShardSketches(tok, Seq("source"), "sh",
         pmod(col("doc_id"), lit(8)), lgK = 9),
       Seq("source"), lgK = 9)
-    val a = thetaBySrc.select(col("source").as("src_a"),
-      col("tsketch").as("ts_a"))
-    val b = thetaBySrc.select(col("source").as("src_b"),
-      col("tsketch").as("ts_b"))
-    a.join(b, col("src_a") < col("src_b"))
-      .select(col("src_a"), col("src_b"),
-        call_function("graft_theta_estimate", col("ts_a")).as("est_a"),
-        call_function("graft_theta_estimate", col("ts_b")).as("est_b"),
-        call_function("graft_theta_intersect", col("ts_a"), col("ts_b"))
-          .as("est_overlap"),
-        (call_function("graft_theta_intersect", col("ts_a"), col("ts_b")) /
-          call_function("graft_theta_union_est", col("ts_a"), col("ts_b")))
-          .as("est_jaccard"))
+    Sketches.thetaOverlap(
+        thetaBySrc.withColumnRenamed("source", "src_a"),
+        thetaBySrc.withColumnRenamed("source", "src_b"), Seq.empty)
+      .filter(col("src_a") < col("src_b"))
       .orderBy("src_a", "src_b")
       .coalesce(1).write.mode("overwrite").parquet(s"$outDir/theta")
 

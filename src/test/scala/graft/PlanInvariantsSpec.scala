@@ -195,7 +195,7 @@ class PlanInvariantsSpec extends SparkSpec {
     assert(p.contains("BroadcastNestedLoopJoin"), p)
     assert(!p.contains("SortMergeJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
-    assert(p.contains("graft_theta"), p)
+    assert(p.contains("theta_sketch_agg"), p)
   }
 
   test("q23 exact dedup: single hash exchange (map-side combined)") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ext.Sketches
+import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.spark.sql.functions._
 
 /** Mergeable KLL quantile sketches — the honest contract, mirroring
@@ -37,14 +38,15 @@ class QuantileSketchSpec extends SparkSpec {
     lo.toDouble / sortedVals.length
   }
 
+  // every sketch frame here is one `qsketch` column, so the estimate
+  // is the only column quantileEstimates leaves
   private def estimate(sketchDf: org.apache.spark.sql.DataFrame,
                        q: Double): Double =
-    sketchDf.select(call_function("graft_kll_quantile",
-      col("qsketch"), lit(q)).as("e")).head().getDouble(0)
+    Sketches.quantileEstimates(sketchDf, Seq(q)).head().getDouble(0)
 
   test("below the compaction threshold the sketch is exact") {
     val small = spark.range(150).select(($"id" * 7 % 150).cast("double").as("v"))
-    val blob = small.agg(call_function("graft_kll", $"v", lit(200)).as("qsketch"))
+    val blob = small.agg(kll_sketch_agg_double($"v", 200).as("qsketch"))
     // 150 distinct values 0..149 scaled by nothing: INCLUSIVE quantile =
     // smallest value with rank >= q
     assert(estimate(blob, 0.0) == 0.0)
@@ -53,7 +55,7 @@ class QuantileSketchSpec extends SparkSpec {
   }
 
   test("sharded-then-merged tracks truth and single-pass within the rank band") {
-    val single = df.agg(call_function("graft_kll", $"v", lit(200)).as("qsketch"))
+    val single = df.agg(kll_sketch_agg_double($"v", 200).as("qsketch"))
     val shards = Sketches.quantileShardSketches(
       df, Seq("grp"), "v", $"shard")
     val merged = Sketches.quantileUnionSketches(shards, Seq.empty)
@@ -83,10 +85,15 @@ class QuantileSketchSpec extends SparkSpec {
     est.collect().foreach { r =>
       assert(r.getDouble(1) < r.getDouble(2)) // p50 < p99 on uniform data
     }
+    // 0.995 and 1.0 both name `q100`: rejected, not silently overwritten
+    val clash = intercept[IllegalArgumentException] {
+      Sketches.quantileEstimates(mid, Seq(0.5, 0.995, 1.0))
+    }
+    assert(clash.getMessage.contains("q100"), clash.getMessage)
   }
 
   test("state stays KB-sized regardless of input rows") {
-    val blob = df.agg(call_function("graft_kll", $"v", lit(200)).as("qsketch"))
+    val blob = df.agg(kll_sketch_agg_double($"v", 200).as("qsketch"))
       .head().getAs[Array[Byte]]("qsketch")
     assert(blob.length < 8192, s"sketch blob ${blob.length} B for $n rows")
   }
@@ -95,30 +102,45 @@ class QuantileSketchSpec extends SparkSpec {
     val withNulls = spark.range(100).select(
       when($"id" % 2 === 0, $"id".cast("double")).as("v")) // odds → null
     val blob = withNulls.agg(
-      call_function("graft_kll", $"v", lit(200)).as("qsketch"))
+      kll_sketch_agg_double($"v", 200).as("qsketch"))
     assert(estimate(blob, 1.0) == 98.0) // nulls never enter
     val empty = spark.range(10)
       .select(lit(null).cast("double").as("v"))
-      .agg(call_function("graft_kll", $"v", lit(200)).as("qsketch"))
+      .agg(kll_sketch_agg_double($"v", 200).as("qsketch"))
     assert(estimate(empty, 0.5).isNaN)
     // rank(quantile(q)) ≈ q on the big sketch
-    val big = df.agg(call_function("graft_kll", $"v", lit(200)).as("qsketch"))
+    val big = df.agg(kll_sketch_agg_double($"v", 200).as("qsketch"))
     val med = estimate(big, 0.5)
-    val r = big.select(call_function("graft_kll_rank",
+    val r = big.select(kll_sketch_get_rank_double(
       col("qsketch"), lit(med)).as("r")).head().getDouble(0)
     assert(math.abs(r - 0.5) < 0.05, s"rank($med) = $r")
   }
 
   test("analysis-time guards: k range and types are loud") {
     val e1 = intercept[Exception] {
-      df.agg(call_function("graft_kll", $"v", lit(4)).as("s")).collect()
+      df.agg(kll_sketch_agg_double($"v", 4).as("s")).collect()
     }
-    assert(e1.getMessage.contains("[8, 65535]") ||
-      e1.getMessage.toLowerCase.contains("literal"), e1.getMessage)
+    assert(e1.getMessage.contains("KLL_SKETCH_K_OUT_OF_RANGE"), e1.getMessage)
     val e2 = intercept[Exception] {
-      df.agg(call_function("graft_kll", $"id", lit(200)).as("s")).collect()
+      df.agg(kll_sketch_agg_double($"id", 200).as("s")).collect()
     }
     assert(e2.getMessage.contains("double") ||
       e2.getMessage.contains("DOUBLE"), e2.getMessage)
+  }
+
+  test("sketch bytes written by DataSketches directly still read and roll up") {
+    // the encoding persisted at ingest before the built-ins: a heap
+    // KllDoublesSketch(k=200) serialized with toByteArray
+    val sk = KllDoublesSketch.newHeapInstance(200)
+    (1 to 150).foreach(i => sk.update(i.toDouble))
+    val stored = Seq(sk.toByteArray).toDF("qsketch")
+    val rolled = Sketches.quantileUnionSketches(stored, Seq.empty)
+    Seq(stored, rolled).foreach { s =>
+      assert(estimate(s, 0.5) == 75.0)
+      val r = s.select(kll_sketch_get_n_double($"qsketch"),
+        kll_sketch_get_rank_double($"qsketch", lit(75.0))).head()
+      assert(r.getLong(0) == 150L)
+      assert(r.getDouble(1) == 0.5) // INCLUSIVE: 75 of 150 values <= 75
+    }
   }
 }

@@ -2,6 +2,11 @@
 """Independent cross-check for the sketch estimation regimes (round-16
 verdict "What's missing" #4 / next-round #6).
 
+The engine's HLL, KLL and theta sketches are Spark's built-in
+DataSketches functions (hll_*, kll_*_double, theta_*), so this is a
+cross-check of Spark's built-in KLL and Theta (and HLL) as the engine
+parameterizes and rolls them up.
+
 SketchesSpec / QuantileSketchSpec / ThetaSketchSpec gate the engine's
 HLL / KLL / theta estimates against THIS LIBRARY'S own exact
 recomputation and self-declared error bands — sound, but a consistently
