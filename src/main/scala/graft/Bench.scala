@@ -57,6 +57,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // >= 5 timed iterations (round-2 verdict: n=3 made round-over-round
+    // ratios untrustworthy); per-query spread is reported so a regression
+    // can be told apart from sampling noise
+    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "5").toInt
+    require(iters >= 1, s"SPARK_GRAFT_BENCH_ITERS must be >= 1, got $iters")
     val cpus = Session.cpus(32)
     val spark = Session.local(cpus, cpus)
 
@@ -82,20 +87,6 @@ object Bench {
     val wallT0 = System.nanoTime()
     // warm-up (untimed)
     names.foreach(runOnce)
-    // >= 5 timed iterations (round-2 verdict: n=3 made round-over-round
-    // ratios untrustworthy); per-query spread is reported so a regression
-    // can be told apart from sampling noise
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "5").toInt
-    // Interleave mode (A/B methodology): iterate round-robin across the
-    // selected queries instead of per-query blocks, so slow host-load
-    // drift over the minutes of a run hits every query's samples equally
-    // rather than biasing whichever query ran last. Interleaved is the
-    // DEFAULT from round 11 on: block mode demonstrably biased late
-    // queries under ramping load (r10: q75–q81 uniformly 1.4–1.7× while
-    // loadavg climbed 3.75→4.31, and a load burst parked on q74's
-    // 5-iteration block recorded a 9.8× phantom the judge refuted at
-    // 0.89 s). Set SPARK_GRAFT_BENCH_INTERLEAVE=0 for the legacy blocks.
-    val interleave = !sys.env.get("SPARK_GRAFT_BENCH_INTERLEAVE").contains("0")
     def f(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def summarize(name: String, times: Seq[Double]) = {
       val r =
@@ -117,20 +108,16 @@ object Bench {
       System.err.println(s"[bench] $rec")
       r
     }
-    val results =
-      if (interleave) {
-        // emit each round's samples as they land: block mode's
-        // incremental safeguard (a partial run still leaves records)
-        // would otherwise not kick in until the full iters×queries
-        // matrix finished
-        val samples = (1 to iters).map { it =>
-          val round = names.map(n => n -> runOnce(n))
-          System.err.println(s"""[bench] {"iter":$it,${round.map { case (n, t) =>
-            "\"" + n + "\":" + f(t) }.mkString(",")}}""")
-          round
-        }
-        names.map(n => summarize(n, samples.map(_.toMap.apply(n))))
-      } else names.map(name => summarize(name, (1 to iters).map(_ => runOnce(name))))
+    // round-robin across queries, never per-query blocks: host-load
+    // drift hits every query's samples equally (r10: blocks biased the
+    // late queries 1.4–1.7×); a partial run still leaves each round
+    val samples = (1 to iters).map { it =>
+      val round = names.map(n => n -> runOnce(n))
+      System.err.println(s"""[bench] {"iter":$it,${round.map { case (n, t) =>
+        "\"" + n + "\":" + f(t) }.mkString(",")}}""")
+      round
+    }
+    val results = names.map(n => summarize(n, samples.map(_.toMap.apply(n))))
     val total = results.map(_._2._1).filter(_ >= 0).sum
     val wallSec = (System.nanoTime() - wallT0) / 1e9
 
@@ -147,12 +134,12 @@ object Bench {
                            emit: String => Unit): Option[String] = {
     var frag: Option[String] = None
     // BASELINE_BENCH.json (committed at the repo root) holds per-query
-    // reference medians per methodology ("block" / "interleaved").
-    // Every run emits the per-query ratio vs the SAME-mode baseline on
-    // stderr and a loud OVER_2X summary line on stdout, so a q19-style
-    // mark is a one-line artifact diff instead of SCALE.md archaeology.
-    // Ratios only mean something within a methodology and at the
-    // baseline's sf — mismatches are reported as skipped, not compared.
+    // reference medians; this run compares against its "interleaved"
+    // column (the only iteration order Bench has). Every run emits the
+    // per-query ratio on stderr and a loud OVER_2X summary line on
+    // stdout, so a q19-style mark is a one-line artifact diff instead
+    // of SCALE.md archaeology. Ratios only mean something at the
+    // baseline's sf — a mismatch is reported as skipped, not compared.
     try {
       val bp = java.nio.file.Paths.get("BASELINE_BENCH.json")
       if (java.nio.file.Files.exists(bp) && only.isEmpty) {
@@ -160,7 +147,6 @@ object Bench {
         val jv = org.json4s.jackson.JsonMethods.parse(
           new String(java.nio.file.Files.readAllBytes(bp),
             java.nio.charset.StandardCharsets.UTF_8))
-        val mode = if (interleave) "interleaved" else "block"
         val baseSf = (jv \ "sf") match { case JString(x) => x; case _ => "" }
         val baseRound = (jv \ "recorded_round") match {
           case JString(x) => x; case _ => "?" }
@@ -170,7 +156,7 @@ object Bench {
         else {
           val base: Map[String, Double] = (jv \ "queries") match {
             case JObject(fields) => fields.collect {
-              case (q, qv) => (qv \ mode) match {
+              case (q, qv) => (qv \ "interleaved") match {
                 case JDouble(d) => Some(q -> d)
                 case JInt(i)    => Some(q -> i.toDouble)
                 case _          => None
@@ -219,8 +205,8 @@ object Bench {
               }
             val worstStr = short(worst._1) + ":" + f2(worst._4) +
               reread.map(m => "/rr" + f2(m / worst._3)).getOrElse("")
-            emit(s"""{"metric":"baseline_ratio","mode":"$mode","baseline_round":"$baseRound","n":${ratios.size},"median_ratio":${f2(medianRatio)},"worst":"$worstStr","OVER_2X":${overEntries(over)}}""")
-            frag = Some(s""""baseline":{"mode":"$mode","round":"$baseRound","n":${ratios.size},"median_ratio":${f2(medianRatio)},"worst":"$worstStr","over2x_n":${over.size},"OVER_2X":${overEntries(over.take(5))}}""")
+            emit(s"""{"metric":"baseline_ratio","mode":"interleaved","baseline_round":"$baseRound","n":${ratios.size},"median_ratio":${f2(medianRatio)},"worst":"$worstStr","OVER_2X":${overEntries(over)}}""")
+            frag = Some(s""""baseline":{"mode":"interleaved","round":"$baseRound","n":${ratios.size},"median_ratio":${f2(medianRatio)},"worst":"$worstStr","over2x_n":${over.size},"OVER_2X":${overEntries(over.take(5))}}""")
           }
         }
       }
@@ -284,7 +270,7 @@ object Bench {
       "\"" + k + "\":[" + f(mn) + "," + f(mx) + "]"
     }.mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qsFull,"iters":$iters,"interleaved":$interleave,$telemetry,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qsFull,"iters":$iters,$telemetry,"sf":"$sfDir"}"""
     System.err.println(fullLine)
     System.err.println(s"""{"metric":"spread_min_max","iters":$iters,$telemetry,"queries":$spreadFull}""")
     try {

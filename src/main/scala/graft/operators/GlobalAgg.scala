@@ -19,12 +19,13 @@ import org.apache.spark.sql.functions._
   * join it back. Work is a map-side-combined aggregate; nothing ever
   * single-partitions.
   *
-  * [[runningLong]] is the [[Ids.stableIds]] prefix machinery applied
-  * to sums instead of counts: range-partition on the order key,
-  * per-partition running sum (window partitioned by the partition id),
-  * then add each partition's broadcast prefix offset. The driver only
-  * ever sees one subtotal per partition — the same bounded-collect
-  * class as stableIds — so the shape holds at any frame size.
+  * [[runningLong]] is the one prefix-offset operator (global running
+  * totals, and through [[stableIds]] contiguous global row ids):
+  * range-partition on the order key, per-partition running sum
+  * (window partitioned by the partition id), then add each
+  * partition's broadcast prefix offset. The driver only ever sees one
+  * subtotal per partition (a bounded collect while the frame is
+  * built), so the shape holds at any frame size.
   */
 object GlobalAgg {
 
@@ -46,10 +47,9 @@ object GlobalAgg {
 
   /** `df` plus an INCLUSIVE running total (unboundedPreceding ..
     * currentRow in `orderCols` order) for each `(valueCol, name)` in
-    * `values`, and optionally the grand total as a literal column for
-    * each entry of `grandTotals` (running-sum name → total column
-    * name) — the totals are already known driver-side from the prefix
-    * collect, so they cost nothing extra.
+    * `values`, and optionally the grand total for each entry of
+    * `grandTotals` (running-sum name → total column name) as a
+    * literal — known driver-side from the subtotal collect.
     *
     * Values must be integral (summed exactly as longs). `orderCols`
     * should be a total order of the frame (each of this library's call
@@ -70,52 +70,51 @@ object GlobalAgg {
     val spark = df.sparkSession
     val parts = numPartitions.getOrElse(
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val vNames = values.indices.map(i => s"__cs$i")
-    val base = values.zip(vNames).foldLeft(df) {
-      case (acc, ((v, _), tmp)) => acc.withColumn(tmp, v.cast("long"))
+    val idx = values.indices
+    val base = values.zip(idx).foldLeft(df) {
+      case (acc, ((v, _), i)) => acc.withColumn(s"__cs$i", v.cast("long"))
     }
     val ranged = graft.Caching.persisted(base
       .repartitionByRange(parts, orderCols: _*)
       .withColumn("__pid", spark_partition_id()))
     // one tiny job: per-partition subtotals → exclusive prefix offsets
-    // (empty partitions are absent and contribute 0)
-    val subtotals = ranged.groupBy(col("__pid"))
-      .agg(sum(col(vNames.head)).as("s0"),
-        vNames.tail.zipWithIndex.map { case (n, i) =>
-          sum(col(n)).as(s"s${i + 1}") }: _*)
-      .collect()
-      .map(r => (r.getInt(0), vNames.indices.map(i => r.getLong(i + 1))))
-      .sortBy(_._1)
-    val offsets = subtotals.scanLeft(
-      (0, vNames.indices.map(_ => 0L): Seq[Long])) {
-      case ((_, acc), (pid, ss)) => (pid, acc.zip(ss).map(t => t._1 + t._2))
+    // (empty partitions are absent and contribute 0). An in-plan
+    // offsets frame (Range × broadcast subtotals) builds with no job
+    // but raised the `ScaleBench rank` exponent; see SCALE.md.
+    val subCols = idx.map(i => sum(col(s"__cs$i")))
+    val subtotals = ranged.groupBy(col("__pid")).agg(subCols.head, subCols.tail: _*)
+      .collect().map(r => r.getInt(0) -> idx.map(i => r.getLong(i + 1)))
+      .sortBy(_._1).toSeq
+    val prefix = subtotals.scanLeft(Seq.fill(idx.size)(0L)) {
+      case (acc, (_, ss)) => acc.zip(ss).map(t => t._1 + t._2)
     }
-    val totals = offsets.last._2 // grand totals, driver-side
-    val offsetRows = subtotals.map(_._1).zip(offsets.map(_._2))
-    val offsetDf = spark.createDataFrame(
-        offsetRows.toSeq.map { case (p, os) => (p, os) })
+    val offsets = spark.createDataFrame(subtotals.map(_._1).zip(prefix))
       .toDF("__pid", "__os")
-      .select(col("__pid") +:
-        vNames.indices.map(i => col("__os")(i).as(s"__off$i")): _*)
-    // explicit ROWS frame (advisor r20): the default RANGE frame is
-    // peer-inclusive on orderCols ties, which differs from the
-    // rowsBetween window forms this operator replaced; live call sites
-    // order by distinct histogram keys (identical either way), the
-    // explicit frame makes the scaladoc's tie contract true in general
+    // ROWS, not the default peer-inclusive RANGE frame: the tie
+    // contract above, and a running count that IS row_number (stableIds)
     val w = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val joined = ranged.join(broadcast(offsetDf), Seq("__pid"))
-    val withRuns = values.zipWithIndex.foldLeft(joined) {
+    val joined = ranged.join(broadcast(offsets), Seq("__pid"))
+    val out = values.zip(idx).foldLeft(joined) {
       case (acc, ((_, name), i)) =>
-        acc.withColumn(name,
-          sum(col(s"__cs$i")).over(w) + col(s"__off$i"))
+        val withRun = acc.withColumn(name,
+          sum(col(s"__cs$i")).over(w) + col("__os")(i))
+        grandTotals.get(name).fold(withRun)(withRun.withColumn(_, lit(prefix.last(i))))
     }
-    val withTotals = values.zipWithIndex.foldLeft(withRuns) {
-      case (acc, ((_, name), i)) =>
-        grandTotals.get(name).fold(acc)(tn =>
-          acc.withColumn(tn, lit(totals(i))))
-    }
-    withTotals.drop("__pid" +: vNames.indices.flatMap(i =>
-      Seq(s"__cs$i", s"__off$i")): _*)
+    out.drop(Seq("__pid", "__os") ++ idx.map(i => s"__cs$i"): _*)
+  }
+
+  /** Contiguous global row ids `0 .. n-1` in `orderCols` order, without
+    * the global sort: a running count (ROWS frame, so exactly
+    * `row_number` plus the partition offset) minus one. Ids are
+    * deterministic when `orderCols` is a total order; tied rows get
+    * arbitrary relative ids, like any SQL `row_number` tie. */
+  def stableIds(df: DataFrame, orderCols: Seq[Column],
+                idName: String = "row_id",
+                numPartitions: Option[Int] = None): DataFrame = {
+    require(orderCols.nonEmpty, "stableIds needs ordering columns")
+    runningLong(df, orderCols, Seq(lit(1L) -> idName),
+      numPartitions = numPartitions)
+      .withColumn(idName, col(idName) - 1L)
   }
 }

@@ -1456,9 +1456,9 @@ object TimeSeriesQueries {
     // per-user frame is collapsed but NOT bounded — |users| is
     // 10⁸–10⁹ at the 100 TB target, so an unpartitioned rank window
     // here would be a single-task sort of tens of GB (the r18 weak
-    // mark). Each axis rank instead comes from Ids.stableIds: range-
-    // partition on the axis order, per-partition row_number + a
-    // broadcast prefix-offset join — fully distributed, bit-identical
+    // mark). Each axis rank instead comes from GlobalAgg.stableIds:
+    // range-partition on the axis order, per-partition running count +
+    // a broadcast prefix-offset join — fully distributed, bit-identical
     // ranks (total order via the user_id tie-break). The three passes
     // CHAIN (each re-ranges the previous output, carrying earlier
     // ranks along), so no user-keyed join is ever needed; n rides in
@@ -1467,7 +1467,6 @@ object TimeSeriesQueries {
     // user-cardinality global windows outright.
     "q167_rfm_segments" -> ((s, d) => {
       import s.implicits._
-      import graft.operators.Ids
       val per = graft.Caching.persisted(
         events(s, d).groupBy($"user_id")
           .agg(max(date_trunc("day", $"ts").cast("date")).as("last_day"),
@@ -1475,9 +1474,9 @@ object TimeSeriesQueries {
             sum(expr("CAST(round(value * 100, 0) AS BIGINT)"))
               .as("cents")))
       val nDf = per.agg(count(lit(1)).as("n"))
-      val ranked = Ids.stableIds(
-        Ids.stableIds(
-          Ids.stableIds(per,
+      val ranked = GlobalAgg.stableIds(
+        GlobalAgg.stableIds(
+          GlobalAgg.stableIds(per,
             Seq($"last_day".desc, $"user_id"), "r_rid"),
           Seq($"freq".desc, $"user_id"), "f_rid"),
         Seq($"cents".desc, $"user_id"), "m_rid")

@@ -2,7 +2,7 @@ package graft.scale
 
 import graft.Caching
 import graft.ScaleBench._
-import graft.operators.{Ids, Layout, Postprocess}
+import graft.operators.{GlobalAgg, Layout, Postprocess}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -109,7 +109,7 @@ object SeriesBenches {
     })
 
   /** Distributed vs single-task exact ranks (the q167 rewrite): three
-    * chained [[Ids.stableIds]] passes vs three unpartitioned
+    * chained [[GlobalAgg.stableIds]] passes vs three unpartitioned
     * `row_number()` windows (n ≤ 8·10⁶: past that the single task just
     * burns CPU) over three hash-scrambled axes; both must sum to
     * 3·n(n+1)/2 — a wrong offset or a dropped row cannot hide. Cache
@@ -123,7 +123,8 @@ object SeriesBenches {
         xxhash64(col("id") + 1L).as("b"),
         xxhash64(col("id") + 2L).as("c"))
       val (sSum, sSec) = timed {
-        Ids.stableIds(Ids.stableIds(Ids.stableIds(df, Seq(col("a")), "ra"),
+        import GlobalAgg.stableIds
+        stableIds(stableIds(stableIds(df, Seq(col("a")), "ra"),
             Seq(col("b")), "rb"), Seq(col("c")), "rc")
           .agg(sum(col("ra") + col("rb") + col("rc") + 3L)).head().getLong(0)
       }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The appliance-metadata JSON shared by UK-DALE and REFIT:
   * `{"House N": [{channel, appliance_raw_label, ...}, ...], ...}`
@@ -9,18 +10,28 @@ import org.apache.spark.sql.functions._
 object HouseMetadata {
 
   /** One row per (house_id, channel_n) with `raw_label_meta` and the
-    * per-channel `fields`. The top-level keys are dynamic, so the
-    * (dim-sized) schema is introspected driver-side and each house
-    * exploded. */
+    * per-channel `fields` (strings; absent = null). One read, parsed
+    * into a declared `map<string, array<struct>>` that absorbs the
+    * dynamic house keys, so building runs no Spark job; a malformed
+    * file or a non-integer `House` key fails the read. */
   def read(spark: SparkSession, file: String, fields: String*): DataFrame = {
-    val meta = spark.read.option("multiLine", value = true).json(file)
-    meta.schema.fieldNames.filter(_.startsWith("House ")).map { hk =>
-      meta.select(explode(col(s"`$hk`")).as("e"))
-        .select(Seq(
-          lit(hk.stripPrefix("House ").trim.toInt).as("house_id"),
-          col("e.channel").cast("int").as("channel_n"),
-          col("e.appliance_raw_label").as("raw_label_meta")) ++
-          fields.map(f => col(s"e.$f").as(f)): _*)
-    }.reduce(_ unionByName _)
+    val entry = StructType((Seq("channel", "appliance_raw_label") ++ fields)
+      .map(StructField(_, StringType)))
+    val houses = from_json(col("value"), MapType(StringType, ArrayType(entry)),
+      Map("mode" -> "FAILFAST"))
+    val id = trim(col("key").substr(7, Int.MaxValue)).try_cast("int")
+    spark.read.option("wholetext", value = true).text(file)
+      .select(explode(houses))
+      .filter(col("key").startsWith("House "))
+      .select(
+        when(id.isNull, raise_error(concat(
+          lit("metadata key is not 'House <integer>': "), col("key"))))
+          .otherwise(id).as("house_id"),
+        explode(col("value")).as("e"))
+      .select(Seq(
+        col("house_id"),
+        col("e.channel").cast("int").as("channel_n"),
+        col("e.appliance_raw_label").as("raw_label_meta")) ++
+        fields.map(f => col(s"e.$f").as(f)): _*)
   }
 }

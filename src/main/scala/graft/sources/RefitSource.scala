@@ -1,9 +1,15 @@
 package graft.sources
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+
+import scala.util.Using
+
 import graft.nilm.{Labels, NilmDataset}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** S2/S5/P1/P10/F3/F4: REFIT wide CSVs — `CLEAN_HouseN.csv` with
   * `Unix, Time, Issues, Aggregate, Appliance1..9` columns; `Time` and
@@ -32,12 +38,19 @@ object RefitSource {
         f.toString))
   }
 
-  /** One house: wide csv → narrow (house_id, channel_n, col_name, ts, power). */
+  /** One house: wide csv → narrow (house_id, channel_n, col_name, ts, power).
+    * The column names come from the file's first line, read through
+    * the Hadoop FS, so no Spark job infers the header. */
   def loadHouse(spark: SparkSession, houseId: Int, file: String): DataFrame = {
-    val wide0 = spark.read.option("header", value = true).csv(file)
-    val wide = wide0.drop("Time", "Issues") // P1
-    val chanCols = wide.columns.filter(_ != "Unix")
-    val narrow = wide
+    val p = new Path(file)
+    val header = Using.resource(new BufferedReader(new InputStreamReader(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p),
+      StandardCharsets.UTF_8)))(_.readLine())
+    require(header != null, s"empty REFIT csv: $file")
+    val names = header.split(",", -1).map(_.stripPrefix("\"").stripSuffix("\""))
+    val chanCols = names.filterNot(Set("Unix", "Time", "Issues")) // P1
+    val narrow = spark.read.option("header", value = true)
+      .schema(StructType(names.map(StructField(_, StringType)))).csv(file)
       .withColumn("ts", timestamp_seconds(col("Unix").cast("long")))
       .unpivot(
         Array(col("ts")),

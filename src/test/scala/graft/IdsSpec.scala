@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Ids
+import graft.operators.GlobalAgg
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,7 +20,7 @@ class IdsSpec extends SparkSpec {
     $"id".as("payload"))
 
   test("ids are exactly 0..n-1 and follow orderCols order") {
-    val out = Ids.stableIds(df, Seq(col("k")), numPartitions = Some(16))
+    val out = GlobalAgg.stableIds(df, Seq(col("k")), numPartitions = Some(16))
     val stats = out.agg(
       count(lit(1)), countDistinct($"row_id"), min($"row_id"), max($"row_id"))
       .head()
@@ -36,14 +36,14 @@ class IdsSpec extends SparkSpec {
   }
 
   test("deterministic across recomputation; empty partitions tolerated") {
-    val a = Ids.stableIds(df, Seq(col("k")), numPartitions = Some(16))
+    val a = GlobalAgg.stableIds(df, Seq(col("k")), numPartitions = Some(16))
       .select($"k", $"row_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = Ids.stableIds(df, Seq(col("k")), numPartitions = Some(16))
+    val b = GlobalAgg.stableIds(df, Seq(col("k")), numPartitions = Some(16))
       .select($"k", $"row_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(a == b)
     // more partitions than distinct keys → empties must not shift ids
     val tiny = spark.range(5).select($"id".as("k"))
-    val t = Ids.stableIds(tiny, Seq(col("k")), numPartitions = Some(32))
+    val t = GlobalAgg.stableIds(tiny, Seq(col("k")), numPartitions = Some(32))
       .orderBy($"k").select($"row_id").as[Long].collect()
     assert(t.toSeq == Seq(0L, 1L, 2L, 3L, 4L))
     graft.Caching.release()
@@ -58,12 +58,12 @@ class IdsSpec extends SparkSpec {
     val base = spark.range(1000).select(
       xxhash64($"id").as("k"),
       xxhash64($"id" + 7L).as("j"))
-    val chained = Ids.stableIds(
-      Ids.stableIds(base, Seq(col("k")), "k_rid", Some(8)),
+    val chained = GlobalAgg.stableIds(
+      GlobalAgg.stableIds(base, Seq(col("k")), "k_rid", Some(8)),
       Seq(col("j").desc), "j_rid", Some(8))
-    val indepK = Ids.stableIds(base, Seq(col("k")), "k_rid", Some(8))
+    val indepK = GlobalAgg.stableIds(base, Seq(col("k")), "k_rid", Some(8))
       .select($"k", $"k_rid".as("k_expect"))
-    val indepJ = Ids.stableIds(base, Seq(col("j").desc), "j_rid", Some(8))
+    val indepJ = GlobalAgg.stableIds(base, Seq(col("j").desc), "j_rid", Some(8))
       .select($"j", $"j_rid".as("j_expect"))
     val bad = chained.join(indepK, Seq("k")).join(indepJ, Seq("j"))
       .filter($"k_rid" =!= $"k_expect" || $"j_rid" =!= $"j_expect")
@@ -75,11 +75,11 @@ class IdsSpec extends SparkSpec {
   }
 
   test("plan: distributed end to end — no single-partition exchange") {
-    val out = Ids.stableIds(df, Seq(col("k")), numPartitions = Some(16))
+    val out = GlobalAgg.stableIds(df, Seq(col("k")), numPartitions = Some(16))
     val p = out.queryExecution.executedPlan.toString
     assert(!p.contains("Exchange SinglePartition"),
       s"global-sort bottleneck crept in:\n$p")
-    // the ranged frame is a pinned cache (see Ids scaladoc), so the
+    // the ranged frame is a pinned cache (see GlobalAgg scaladoc), so the
     // range exchange lives inside the InMemoryTableScan's cached plan
     assert(p.contains("InMemoryTableScan"), p)
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),

@@ -7,12 +7,6 @@
 # `git worktree add /tmp/r7 <commit>`); the script refuses to run
 # without it — an unpinned second arm would silently bench HEAD
 # against itself and "confirm" no regression vacuously.
-#
-# Caveat: SPARK_GRAFT_BENCH_INTERLEAVE only exists from round 9's
-# Bench onward; a baseline predating it ignores the variable and runs
-# block mode. For a strict harness match, compare per-query MEDIANS
-# only (both modes emit them), or cherry-pick the Bench harness into
-# the baseline worktree first.
 set -eu
 BASELINE_DIR="${1:?usage: ab_bench.sh <baseline-worktree-dir> [query-list]}"
 [ -f "$BASELINE_DIR/build.sbt" ] || {
@@ -26,7 +20,6 @@ QS="${2:-q15,q16,q21,q22,q23,q46,q47,q09,q11,q19,q25}"
 export SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1
 export SPARK_GRAFT_BENCH_ONLY="$QS"
 export SPARK_GRAFT_BENCH_ITERS=5
-export SPARK_GRAFT_BENCH_INTERLEAVE=1
 HEAD_DIR="$(cd "$(dirname "$0")/.." && pwd)"
 mkdir -p /tmp/ab
 for i in 1 2; do

@@ -1,50 +1,38 @@
 #!/usr/bin/env python3
-"""Build BASELINE_BENCH.json from two Bench runs (round-16 verdict #3).
+"""Build BASELINE_BENCH.json from one Bench run (round-16 verdict #3).
 
-Inputs are the `target/bench_last.json` files produced by one BLOCK-mode
-run (SPARK_GRAFT_BENCH_INTERLEAVE=0) and one INTERLEAVED run (default)
-at the same sf, recorded back-to-back on an otherwise-idle host. The
-output maps every query to its per-methodology reference median;
-`graft.Bench` reads the committed file on every run and emits per-query
-ratios + an OVER_2X line against the SAME-mode baseline, so 2x-bound
-adjudication is a mechanical artifact diff.
+The input is the `target/bench_last.json` produced by one `graft.Bench`
+run, recorded on an otherwise-idle host. Bench iterates round-robin
+across queries (its only iteration order), so every query's reference
+median lands in the "interleaved" column. `graft.Bench` reads the
+committed file on every run and emits per-query ratios + an OVER_2X
+line against that column, so 2x-bound adjudication is a mechanical
+artifact diff.
 
 Usage:
-  python3 tools/make_baseline_bench.py <block_bench_last.json> \
-      <interleaved_bench_last.json> <round_tag> > BASELINE_BENCH.json
+  python3 tools/make_baseline_bench.py <bench_last.json> <round_tag> \
+      > BASELINE_BENCH.json
 """
 import json
 import sys
 
-block_path, inter_path, round_tag = sys.argv[1], sys.argv[2], sys.argv[3]
+inter_path, round_tag = sys.argv[1], sys.argv[2]
 
-
-def load(path):
-    with open(path) as f:
-        head = json.loads(f.readline())
-    assert head.get("metric") == "total", path
-    return head
-
-
-blk, itl = load(block_path), load(inter_path)
-assert blk["sf"] == itl["sf"], "mixed scale factors"
-assert set(blk["queries"]) == set(itl["queries"]), "query sets differ"
+with open(inter_path) as f:
+    itl = json.loads(f.readline())
+assert itl.get("metric") == "total", inter_path
 
 out = {
     "recorded_round": round_tag,
-    "sf": blk["sf"],
-    "iters": {"block": blk.get("iters"), "interleaved": itl.get("iters")},
-    "loadavg": {"block": [blk.get("loadavg_before"),
-                          blk.get("loadavg_after")],
-                "interleaved": [itl.get("loadavg_before"),
+    "sf": itl["sf"],
+    "iters": {"interleaved": itl.get("iters")},
+    "loadavg": {"interleaved": [itl.get("loadavg_before"),
                                 itl.get("loadavg_after")]},
     "protocol": ("medians of >=5 iterations after one untimed warm-up, "
-                 "collect() sink, local[32]; compare ratios only within "
-                 "the same mode (block medians are per-query blocks, "
-                 "interleaved medians round-robin — see Bench.scala)"),
-    "queries": {
-        q: {"block": blk["queries"][q], "interleaved": itl["queries"][q]}
-        for q in sorted(blk["queries"])},
+                 "collect() sink, local[32], iterations round-robin "
+                 "across queries (see Bench.scala)"),
+    "queries": {q: {"interleaved": itl["queries"][q]}
+                for q in sorted(itl["queries"])},
 }
 json.dump(out, sys.stdout, indent=1)
 print()
