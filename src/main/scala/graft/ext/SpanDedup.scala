@@ -34,9 +34,9 @@ import org.apache.spark.sql.functions._
   */
 object SpanDedup {
 
-  /** Rewrite `textCol`: delete every token covered by a k-gram that
-    * occurs in at least `minDocs` distinct documents. Returns
-    * (idCol, n_tokens, n_removed, clean_text).
+  /** Rewrite `textCol`: delete every token covered by a k-gram
+    * (k = [[TextOps.ShingleK]]) that occurs in at least `minDocs`
+    * distinct documents. Returns (idCol, n_tokens, n_removed, clean_text).
     *
     * `persistOcc` caches the occurrence frame via [[graft.Caching]]
     * (it feeds two plan branches; callers release after their terminal
@@ -51,13 +51,12 @@ object SpanDedup {
     * extra scan+window of pure map work), trading CPU nobody is short
     * of for the memory headroom the wide stages need. */
   def removeDuplicatedSpans(df: DataFrame, idCol: String, textCol: String,
-                            k: Int = TextOps.ShingleK,
                             minDocs: Int = 2,
                             persistOcc: Boolean = true): DataFrame = {
     val id = col(idCol)
     val safeText = coalesce(col(textCol), lit(""))
     val occRaw = TextOps.shingleRowsPos(
-      df.select(id, safeText.as("__t")), idCol, "__t", k)
+      df.select(id, safeText.as("__t")), idCol, "__t")
     val occ = if (persistOcc) graft.Caching.persisted(occRaw) else occRaw
     val dup = occ.select(col("shingle"), id).distinct()
       .groupBy(col("shingle")).agg(count(lit(1)).as("__ndocs"))
@@ -67,7 +66,7 @@ object SpanDedup {
     // explode lands directly in the partial collect_set (no distinct
     // exchange — the set dedups map-side)
     val covered = occ.join(dup, Seq("shingle"), "left_semi")
-      .select(id, explode(sequence(col("pos"), col("pos") + lit(k - 1)))
+      .select(id, explode(sequence(col("pos"), col("pos") + lit(TextOps.ShingleK - 1)))
         .as("__p"))
       .groupBy(id).agg(collect_set(col("__p")).as("__cov"))
     // The rewrite tokens sit in the same coordinate system as the

@@ -60,49 +60,43 @@ object TextOps {
   }
 
   /** The scale form of [[shingles]]: exploded DISTINCT (id, shingle)
-    * rows. At the library k (= [[ShingleK]]) this is a pure map
-    * explode of the native [[graft.functions.ShingleSet]] extractor —
+    * rows at k = [[ShingleK]]: a pure map explode of the native
+    * [[graft.functions.ShingleSet]] extractor —
     * ZERO shuffle (r21: the previous posexplode + per-doc lead()-window
     * form paid an exchange + sort of corpus-token volume plus a
     * (id, shingle)-keyed distinct exchange just to assemble grams;
     * measured 6× at sf0.1, bit-identical rows, parity-pinned in
-    * TextOpsSpec). Documents with < k words produce no rows (the
-    * native extractor yields NULL, which explode drops). The general-k
-    * window form remains for non-default k. */
+    * TextOpsSpec). Documents with < [[ShingleK]] words produce no rows
+    * (the native extractor yields NULL, which explode drops). */
   def shingleRows(df: org.apache.spark.sql.DataFrame, idCol: String,
-                  textCol: String, k: Int = ShingleK): org.apache.spark.sql.DataFrame =
-    if (k == ShingleK) {
-      graft.plans.GraftExtensions.register(df.sparkSession)
-      df.select(col(idCol),
-        explode(call_function("graft_shingle_set", col(textCol)))
-          .as("shingle"))
-    } else shingleRowsWindowed(df, idCol, textCol, k).drop("pos").distinct()
+                  textCol: String): org.apache.spark.sql.DataFrame = {
+    graft.plans.GraftExtensions.register(df.sparkSession)
+    df.select(col(idCol),
+      explode(call_function("graft_shingle_set", col(textCol))).as("shingle"))
+  }
 
   /** Occurrence form of [[shingleRows]]: one row per shingle POSITION
     * (`pos` 0-based, no distinct) — the duplicate-span queries need
     * every occurrence plus its location so duplicated-gram counts and
     * token-coverage intervals can be computed (Lee et al., "Deduplicating
     * Training Data Makes Language Models Better", ACL'22, measures dup
-    * substrings by position, not by distinct gram). At the library k
-    * this is a map-only posexplode of the native
-    * [[graft.functions.ShingleRows]] extractor (element i = the
-    * shingle starting at token i, so the posexplode index IS the
-    * token position) — zero shuffle, same r21 rationale and parity
-    * pin as [[shingleRows]]. */
+    * substrings by position, not by distinct gram). A map-only
+    * posexplode of the native [[graft.functions.ShingleRows]]
+    * extractor (element i = the shingle starting at token i, so the
+    * posexplode index IS the token position) — zero shuffle, same r21
+    * rationale and parity pin as [[shingleRows]]. */
   def shingleRowsPos(df: org.apache.spark.sql.DataFrame, idCol: String,
-                     textCol: String, k: Int = ShingleK): org.apache.spark.sql.DataFrame =
-    if (k == ShingleK) {
-      graft.plans.GraftExtensions.register(df.sparkSession)
-      df.select(col(idCol),
-        posexplode(call_function("graft_shingle_rows", col(textCol)))
-          .as(Seq("pos", "shingle")))
-    } else shingleRowsWindowed(df, idCol, textCol, k)
+                     textCol: String): org.apache.spark.sql.DataFrame = {
+    graft.plans.GraftExtensions.register(df.sparkSession)
+    df.select(col(idCol),
+      posexplode(call_function("graft_shingle_rows", col(textCol)))
+        .as(Seq("pos", "shingle")))
+  }
 
   /** The pre-r21 general-k gram builder: posexplode to token rows,
     * per-doc lead() window, concat — one exchange + sort keyed by the
-    * id. Kept for k != [[ShingleK]] (no native extractor) and as the
-    * parity reference the TextOpsSpec pin compares the native forms
-    * against. */
+    * id. Kept as the parity reference the TextOpsSpec pin compares the
+    * native forms against. */
   private[graft] def shingleRowsWindowed(df: org.apache.spark.sql.DataFrame,
                                          idCol: String, textCol: String,
                                          k: Int): org.apache.spark.sql.DataFrame = {
@@ -352,10 +346,9 @@ object TextOps {
     * net-negative for the prune, so q26 runs without it). */
   def jaccardPairs(docs: org.apache.spark.sql.DataFrame, idCol: String,
                    textCol: String, tNum: Int, tDen: Int,
-                   k: Int = ShingleK,
                    maxShingleDf: Option[Long] = None): org.apache.spark.sql.DataFrame = {
     require(tNum > 0 && tNum <= tDen, s"threshold $tNum/$tDen not in (0,1]")
-    val sets = shingleSets(docs, idCol, textCol, k)
+    val sets = shingleSets(docs, idCol, textCol)
     val cand = prefixCandidates(sets, idCol, tNum, tDen, maxShingleDf)
     val inter = size(array_intersect(col("za.__sh"), col("zb.__sh"))).cast("double")
     cand
@@ -372,12 +365,11 @@ object TextOps {
     * [[graft.Caching]]): feeds prefix generation AND both verify
     * sides of [[jaccardPairs]]. */
   private[graft] def shingleSets(docs: org.apache.spark.sql.DataFrame,
-                                 idCol: String, textCol: String,
-                                 k: Int): org.apache.spark.sql.DataFrame = {
+                                 idCol: String, textCol: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wSh = Window.partitionBy(col("shingle"))
     graft.Caching.persisted(
-      shingleRows(docs, idCol, textCol, k)
+      shingleRows(docs, idCol, textCol)
         .withColumn("__df", count(lit(1)).over(wSh))
         .groupBy(col(idCol))
         .agg(array_sort(collect_list(struct(col("__df"), col("shingle"))))
@@ -442,10 +434,10 @@ object TextOps {
     * maxDf is missed; rare-anchor indexing bets that near-copies
     * share at least one rare shingle. */
   def containmentPairs(docs: org.apache.spark.sql.DataFrame, idCol: String,
-                       textCol: String, tNum: Int, tDen: Int, maxDf: Long,
-                       k: Int = ShingleK): org.apache.spark.sql.DataFrame = {
+                       textCol: String, tNum: Int, tDen: Int,
+                       maxDf: Long): org.apache.spark.sql.DataFrame = {
     require(tNum > 0 && tNum <= tDen, s"threshold $tNum/$tDen not in (0,1]")
-    val sets = shingleSets(docs, idCol, textCol, k)
+    val sets = shingleSets(docs, idCol, textCol)
     // __dfs is sorted ASCENDING, so the [2, maxDf] anchors are a
     // CONTIGUOUS slice: count the df<2 prefix and the df<=maxDf
     // prefix, slice between them, and explode ONLY the anchors —

@@ -1,14 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.DoubleType
+import scala.collection.mutable.ArrayBuffer
 
 /** On/off-series postprocessing operators from the reference's
   * disaggregation pipeline (`bert_single_appliance/postprocessing.py`):
   * binary thresholding, run-length analysis, minimum-duration run
-  * zeroing, and sliding-median smoothing — all as single-shuffle window
-  * compositions instead of the reference's driver-side numpy scans.
+  * zeroing, and sliding-median / EWMA smoothing — each one key shuffle
+  * (a window composition, or for the median one sorted sweep per key)
+  * instead of the reference's driver-side numpy scans.
   */
 object Postprocess {
 
@@ -17,6 +21,8 @@ object Postprocess {
   private val StateCol = "__graft_state"
   private val RunIdCol = "__graft_run_id"
   private val RunLenCol = "__graft_run_len"
+  private val KeyCol = "__graft_key"
+  private val ValueCol = "__graft_value"
 
   /** Binary threshold (postprocessing.py:32-42): 1 where value >= t. */
   def threshold(value: Column, t: Double): Column =
@@ -70,43 +76,49 @@ object Postprocess {
     * which uses `scipy.ndimage.median_filter`). Semantics here follow SQL
     * `quantile_cont(x, 0.5)` — shrinking frames at partition edges and
     * linear interpolation for even counts — NOT scipy exactly (scipy
-    * reflect-pads the boundary and picks a low element for even windows);
-    * quantile_cont is what the DuckDB oracle compares. Null values are
-    * skipped by collect_list; an all-null frame yields null (guarded).
-    * Adds column `median_value`.
+    * reflect-pads the boundary and picks a low element for even windows;
+    * see [[slidingMedianScipy]]); quantile_cont is what the DuckDB oracle
+    * compares. Null values are skipped; an all-null frame yields null.
+    * Appends `median_value` (double; `value` is cast to double).
     *
-    * For LARGE windows prefer [[slidingMedianPartitioned]]: the
-    * collect_list fallback here re-buffers and re-sorts the full 2k+1
-    * frame per row — measured 43× slower than the dual-heap sorted pass
-    * at window 101 on 30 M rows (SCALE.md round 16). This form remains
-    * the pick for the reference's own k ≤ 8 smoothing (lag/lead stays
-    * in whole-stage codegen, no re-encoding of the row). */
+    * One form for every k: `repartition(key)` + `sortWithinPartitions(key,
+    * orderCols…)` + one sweep per key with a dual-heap (lazy-deletion)
+    * order-statistic structure — O(log k) per row, one hash exchange on
+    * the key. The window compositions it replaced (lag/lead columns for
+    * k ≤ 8, an `array_sort(collect_list)` frame beyond) re-buffer and
+    * re-sort the 2k+1 frame per row and lost at every measured size, k = 2
+    * included (SCALE.md `median`). `orderCols` are taken as given, so
+    * `.desc` works; per-key data must fit a task — the same bound every
+    * ordered-window operator carries. */
   def slidingMedian(df: DataFrame, key: Column, orderCols: Seq[Column],
                     value: Column, k: Int): DataFrame = {
-    // Small k (the reference's windows are 5-11 samples): build the
-    // frame from codegen'd lag/lead columns instead of a per-row
-    // collect_list window buffer (~2× faster at k=2 on 100k rows); the
-    // partition-edge nulls are dropped, replicating the shrinking
-    // frame. Large k falls back to the collect_list form.
-    val w = Window.partitionBy(key).orderBy(orderCols: _*)
-    val arr =
-      if (k <= 8) {
-        val neighbors = (-k to k).map {
-          case 0 => value
-          case i if i < 0 => lag(value, -i).over(w)
-          case i => lead(value, i).over(w)
+    require(k >= 0, s"k must be >= 0, got $k")
+    // the key and the double value ride after the caller's columns, so
+    // the sweep reads them at fixed indices and emits only the first `width`
+    val width = df.schema.length
+    val outSchema = df.schema.add("median_value", DoubleType, nullable = true)
+    df.withColumn(KeyCol, key).withColumn(ValueCol, value.cast("double"))
+      .repartition(col(KeyCol))
+      .sortWithinPartitions(col(KeyCol) +: orderCols: _*)
+      .mapPartitions { rows =>
+        // consecutive same-key runs (the sort guarantees adjacency);
+        // buffer one key's rows, emit its medians, move on — memory is
+        // bounded by the largest single key, as in any window operator
+        val it = rows.buffered
+        new Iterator[Row] {
+          private var out: Iterator[Row] = Iterator.empty
+          def hasNext: Boolean = out.hasNext || it.hasNext
+          def next(): Row = {
+            if (!out.hasNext) {
+              val k0 = it.head.get(width)
+              val buf = ArrayBuffer.empty[Row]
+              while (it.hasNext && it.head.get(width) == k0) buf += it.next()
+              out = emitKey(buf, width, k).iterator
+            }
+            out.next()
+          }
         }
-        array_sort(filter(array(neighbors: _*), v => v.isNotNull))
-      } else
-        array_sort(collect_list(value).over(w.rowsBetween(-k, k)))
-    val n = size(arr)
-    // odd n → middle element; even n > 0 → mean of the two middle elements
-    val mid = ((n + lit(1)) / lit(2)).cast("int")
-    val lo = (n / lit(2)).cast("int")
-    val med = when(n % 2 === 1, element_at(arr, mid))
-      .when(n > 0, (element_at(arr, lo) + element_at(arr, lo + lit(1))) / 2.0)
-      .otherwise(lit(null))
-    df.withColumn("median_value", med)
+      }(Encoders.row(outSchema))
   }
 
   /** Trailing exponentially-weighted moving average over the last
@@ -141,9 +153,8 @@ object Postprocess {
     if (span <= 16) {
       // Small span: codegen'd lag columns instead of a per-row
       // collect_list buffer — measured 5.2× faster at span 10 on 10-30 M
-      // rows (`ScaleBench ewma`, SCALE.md round 17), the exact analogue of
-      // slidingMedian's k ≤ 8 branch. Missing lags (first rows of a
-      // key) contribute exactly 0.0 to both sums, appended at the TAIL
+      // rows (`ScaleBench ewma`, SCALE.md round 17). Missing lags (first
+      // rows of a key) contribute exactly 0.0 to both sums, appended at the TAIL
       // of the left-to-right reduction, so the value is bit-identical
       // to folding only the available newest-first terms.
       val num = (0 until span).map { j =>
@@ -217,72 +228,15 @@ object Postprocess {
       element_at(array_sort(padded), kl + 1))
   }
 
-  /** Large-window exact sliding median as ONE sorted pass per key:
-    * `repartition(key) + sortWithinPartitions + mapPartitions` with a
-    * dual-heap (lazy-deletion) order-statistic structure — O(log k) per
-    * row where the window-composition form ([[slidingMedian]]'s
-    * collect_list fallback) re-buffers, re-sorts and re-allocates the
-    * full 2k+1 frame per row, O(k log k) with a large constant.
-    *
-    * Same semantics as [[slidingMedian]] (SQL quantile_cont(0.5):
-    * shrinking frames at partition edges, linear interpolation for even
-    * counts, nulls skipped, all-null frame → null median).
-    *
-    * This is the library's only mapPartitions operator, and it exists
-    * because the measurement SURVEY §7.3 deferred came back decisive at
-    * large k (SCALE.md round 16: ≥6× at window 101 on 10-30 M rows);
-    * [[slidingMedian]]'s lag/lead form is still the pick for the
-    * reference's own k ≤ 8 smoothing windows. Shuffle count is identical
-    * (the one hash exchange on `key`); per-key data must fit a task —
-    * the same bound every ordered-window operator carries.
-    *
-    * `keyCols`/`orderCols` are column NAMES (the sort and the per-key
-    * scan must agree on the physical layout, so expressions are not
-    * accepted). `value` must be a DoubleType column. Appends
-    * `median_value`. Ref: postprocessing.py:27-30 (scipy median_filter
-    * smoothing; quantile_cont edge semantics as in [[slidingMedian]]). */
-  def slidingMedianPartitioned(df: DataFrame, keyCols: Seq[String],
-                               orderCols: Seq[String], valueCol: String,
-                               k: Int): DataFrame = {
-    require(k >= 0)
-    val outSchema = org.apache.spark.sql.types.StructType(
-      df.schema.fields :+ org.apache.spark.sql.types.StructField(
-        "median_value", org.apache.spark.sql.types.DoubleType, nullable = true))
-    val valueIdx = df.schema.fieldIndex(valueCol)
-    val keyIdx = keyCols.map(df.schema.fieldIndex)
-    val sorted = df
-      .repartition(keyCols.map(col): _*)
-      .sortWithinPartitions((keyCols ++ orderCols).map(col): _*)
-    sorted.mapPartitions { rows =>
-      // consecutive same-key runs (the sort guarantees adjacency);
-      // buffer one key's rows, emit its medians, move on — memory is
-      // bounded by the largest single key, as in any window operator
-      val it = rows.buffered
-      new Iterator[org.apache.spark.sql.Row] {
-        private var out: Iterator[org.apache.spark.sql.Row] = Iterator.empty
-        def hasNext: Boolean = out.hasNext || it.hasNext
-        def next(): org.apache.spark.sql.Row = {
-          if (!out.hasNext) {
-            val keyOf = (r: org.apache.spark.sql.Row) => keyIdx.map(r.get)
-            val k0 = keyOf(it.head)
-            val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-            while (it.hasNext && keyOf(it.head) == k0) buf += it.next()
-            out = emitKey(buf, valueIdx, k).iterator
-          }
-          out.next()
-        }
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-  }
-
-  /** One key's rows → rows + sliding median, dual-heap sweep. */
-  private def emitKey(rows: scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row],
-                      valueIdx: Int, k: Int): Seq[org.apache.spark.sql.Row] = {
+  /** One key's rows → their first `width` fields + the sliding median of
+    * field `width + 1`, dual-heap sweep. */
+  private def emitKey(rows: ArrayBuffer[Row], width: Int, k: Int): Seq[Row] = {
+    val valueIdx = width + 1
     val n = rows.length
     val heap = new DualMedianHeap
     var added = -1 // highest row index whose value is in the heap
     var removed = 0 // lowest row index not yet evicted
-    val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row](n)
+    val out = new ArrayBuffer[Row](n)
     var i = 0
     while (i < n) {
       while (added < math.min(n - 1, i + k)) {
@@ -295,8 +249,12 @@ object Postprocess {
         if (!r.isNullAt(valueIdx)) heap.remove(r.getDouble(valueIdx))
         removed += 1
       }
-      val med = heap.medianOrNull
-      out += org.apache.spark.sql.Row.fromSeq(rows(i).toSeq :+ med)
+      val r = rows(i)
+      val fields = new Array[Any](width + 1)
+      var j = 0
+      while (j < width) { fields(j) = r.get(j); j += 1 }
+      fields(width) = heap.medianOrNull
+      out += new GenericRow(fields)
       i += 1
     }
     out.toSeq

@@ -276,13 +276,15 @@ object NilmQueries {
     }),
 
     // E3 closing step: binary metrics of the postprocessing pipeline —
-    // prediction = sliding-median-smoothed signal thresholded, ground
-    // truth = raw signal thresholded (train_bert_single.py:278-330's
-    // precision/recall/F1/accuracy as ONE confusion aggregate).
+    // prediction = sliding-median-smoothed signal thresholded (q20's
+    // ±2-row dual-heap sweep), ground truth = raw signal thresholded
+    // (train_bert_single.py:278-330's precision/recall/F1/accuracy as
+    // ONE confusion aggregate).
     "q48_metrics" -> ((s, d) => {
       import s.implicits._
-      val med = Postprocess.slidingMedian(events(s, d), $"user_id",
-        Seq($"ts", $"event_id"), $"value", k = 2)
+      val med = Postprocess.slidingMedian(
+        events(s, d).select($"user_id", $"event_id", $"ts", $"value"),
+        $"user_id", Seq($"ts", $"event_id"), $"value", k = 2)
       Metrics.binaryMetrics(med, $"value" >= 50, $"median_value" >= 50)
         .select($"tp", $"fp", $"fn", $"tn",
           round($"precision", 6).as("precision"),

@@ -128,24 +128,25 @@ object TimeSeriesQueries {
     }),
 
     // W7 sliding median smoothing (postprocessing.py:27-30): ±2-row median
-    // of value per user ordered by time.
+    // of value per user ordered by time — the reference's own window size,
+    // through the one sorted dual-heap sweep per key (the sweep is opaque
+    // to column pruning, so the input is projected first).
     "q20_sliding_median" -> ((s, d) => {
       import s.implicits._
-      Postprocess.slidingMedian(events(s, d), $"user_id", Seq($"ts", $"event_id"), $"value", k = 2)
+      Postprocess.slidingMedian(events(s, d).select($"user_id", $"event_id", $"ts", $"value"),
+          $"user_id", Seq($"ts", $"event_id"), $"value", k = 2)
         .select($"user_id", $"event_id", round($"median_value", 4).as("median_value"))
         .orderBy($"user_id", $"event_id")
     }),
 
-    // W7 at large windows (postprocessing.py:27-30 with a wide filter,
-    // e.g. 40 s over 10 Hz data): the dual-heap sorted-pass form —
-    // O(log k)/row vs the composition's O(k log k)/row; measured ≥6×
-    // at window 101 (SCALE.md round 16). Same quantile_cont semantics
-    // as q20, same single key shuffle.
+    // W7 at a wide window (postprocessing.py:27-30 with a wide filter,
+    // e.g. 40 s over 10 Hz data): the same operator as q20 at k = 12 —
+    // O(log k) per row, so the wide frame costs what the narrow one does
+    // (SCALE.md `median`).
     "q89_sliding_median_heap" -> ((s, d) => {
       import s.implicits._
-      Postprocess.slidingMedianPartitioned(
-          events(s, d).select($"user_id", $"event_id", $"ts", $"value"),
-          Seq("user_id"), Seq("ts", "event_id"), "value", k = 12)
+      Postprocess.slidingMedian(events(s, d).select($"user_id", $"event_id", $"ts", $"value"),
+          $"user_id", Seq($"ts", $"event_id"), $"value", k = 12)
         .select($"user_id", $"event_id", round($"median_value", 4).as("median_value"))
         .orderBy($"user_id", $"event_id")
     }),

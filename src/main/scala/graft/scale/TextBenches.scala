@@ -75,7 +75,7 @@ object TextBenches {
       }
       val (nJacc, tJacc) =
         if (n <= 1000000L) timed {
-          val sets = TextOps.shingleSets(docs, "doc_id", "text", TextOps.ShingleK)
+          val sets = TextOps.shingleSets(docs, "doc_id", "text")
           TextOps.prefixCandidates(sets, "doc_id", 8, 10, None).count()
         } else (-1L, -1.0)
       Caching.release()
@@ -171,12 +171,12 @@ object TextBenches {
     * Spark 4 rewrites into a map-side top-1 (`window_wgl_nodes` proves
     * the rewrite fired; `window_raw_sec` excludes the rule, the shape
     * every non-rank-filter window runs, ≤ 10⁷ docs: a cliff, timed
-    * once; both window legs run for n ≤ 3·10⁷) — plus `Skew.saltedSum` vs a plain groupBy-sum on the same
-    * 50%-hot key. */
+    * once; both window legs run for n ≤ 3·10⁷) — plus a plain groupBy-sum
+    * on the same 50%-hot key (map-side partial aggregation flattens it). */
   val skew: Entry = Entry(Seq(3000000L, 10000000L, 30000000L),
     Seq(Seq("n", "occurrences", "hot_key_rows", "structmin_sec", "window_sec",
       "window_wgl_nodes", "window_raw_sec", "full_dedup_sec", "plain_sum_sec",
-      "salted_sum_sec", "distinct_lines")),
+      "distinct_lines")),
     (ctx, n) => {
       import ctx.spark.implicits._
       val docs = skewedCorpus(ctx.spark, n)
@@ -205,14 +205,12 @@ object TextBenches {
         }
       val fullSec = minOf2(noop(LineDedup.dedupLines(docs, "doc_id", "text")))
       val plainSec = minOf2(occ.groupBy($"__h").agg(sum($"__pos").as("s")).count())
-      val saltedSec = minOf2(
-        graft.operators.Skew.saltedSum(occ, Seq($"__h"), $"__pos", "s").count())
       Seq(Seq("n" -> n, "occurrences" -> 6 * n,
         "hot_key_rows" -> 6 * ((n + 1) / 2),
         "structmin_sec" -> structSec, "window_sec" -> windowSec,
         "window_wgl_nodes" -> windowWglNodes, "window_raw_sec" -> windowRawSec,
         "full_dedup_sec" -> fullSec, "plain_sum_sec" -> plainSec,
-        "salted_sum_sec" -> saltedSec, "distinct_lines" -> distinctLines))
+        "distinct_lines" -> distinctLines))
     })
 
   /** n rows over an n/20-value pool of ~12-char strings (≈20 copies

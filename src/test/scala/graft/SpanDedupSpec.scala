@@ -13,7 +13,7 @@ class SpanDedupSpec extends SparkSpec {
   private def run(rows: Seq[(Long, String)], minDocs: Int = 2) = {
     import spark.implicits._
     val out = SpanDedup.removeDuplicatedSpans(
-      rows.toDF("doc_id", "text"), "doc_id", "text", k = 3,
+      rows.toDF("doc_id", "text"), "doc_id", "text",
       minDocs = minDocs)
       .orderBy("doc_id").collect()
     Caching.release()
@@ -84,12 +84,12 @@ class SpanDedupSpec extends SparkSpec {
     val rows = (0L until 100L).map(i =>
       i -> s"open${i % 5} gram${i % 5} run${i % 5} u${i}a u${i}b")
     val cached = SpanDedup.removeDuplicatedSpans(
-      rows.toDF("doc_id", "text"), "doc_id", "text", k = 3)
+      rows.toDF("doc_id", "text"), "doc_id", "text")
       .orderBy("doc_id").collect()
     Caching.release()
     assert(Caching.trackedCount === 0)
     val plain = SpanDedup.removeDuplicatedSpans(
-      rows.toDF("doc_id", "text"), "doc_id", "text", k = 3,
+      rows.toDF("doc_id", "text"), "doc_id", "text",
       persistOcc = false)
       .orderBy("doc_id").collect()
     // the no-cache form must not register anything to release
@@ -103,11 +103,11 @@ class SpanDedupSpec extends SparkSpec {
       i -> (s"open${i % 7} gram${i % 7} run${i % 7} " +
         s"u${i}a u${i}b u${i}c"))
     val a = SpanDedup.removeDuplicatedSpans(
-      rows.toDF("doc_id", "text"), "doc_id", "text", k = 3)
+      rows.toDF("doc_id", "text"), "doc_id", "text")
       .orderBy("doc_id").collect()
     Caching.release()
     val b = SpanDedup.removeDuplicatedSpans(
-      rows.toDF("doc_id", "text").repartition(13), "doc_id", "text", k = 3)
+      rows.toDF("doc_id", "text").repartition(13), "doc_id", "text")
       .orderBy("doc_id").collect()
     Caching.release()
     assert(a === b)

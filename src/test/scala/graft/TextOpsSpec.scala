@@ -77,10 +77,6 @@ class TextOpsSpec extends SparkSpec {
     val natDistinct = TextOps.shingleRows(df, "doc_id", "text")
       .as[(Long, String)].collect().toSet
     assert(natDistinct == winDistinct)
-    // the non-default-k path still routes through the windowed form
-    val k4 = TextOps.shingleRows(df, "doc_id", "text", k = 4)
-      .as[(Long, String)].collect().toSet
-    assert(k4((4L, "one two three four")) && !k4.exists(_._1 == 2L))
   }
 
   test("hash28/hash60 produce bounded non-negative longs") {
@@ -451,7 +447,7 @@ class TextOpsSpec extends SparkSpec {
     // grams (highest df) sort LAST in the df-ASC order, so only the
     // near-dup pair — whose rare shingles collide — is ever generated
     val nCands = Seq(10, 40).map { d =>
-      val sets = TextOps.shingleSets(corpus(d), "doc_id", "text", 3)
+      val sets = TextOps.shingleSets(corpus(d), "doc_id", "text")
       val c = TextOps.prefixCandidates(sets, "doc_id", 4, 5).count()
       Caching.release()
       c
@@ -483,7 +479,7 @@ class TextOpsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     def cands(ceil: Option[Long]) = {
       val c = TextOps.prefixCandidates(
-        TextOps.shingleSets(docs, "doc_id", "text", 3), "doc_id", 4, 5, ceil)
+        TextOps.shingleSets(docs, "doc_id", "text"), "doc_id", 4, 5, ceil)
         .count()
       Caching.release()
       c
@@ -858,7 +854,7 @@ class TextOpsSpec extends SparkSpec {
     // this pins the shape so a prefix-ordering regression fails CI.
     def cands(n: Long): Long = {
       val sets = TextOps.shingleSets(graft.scale.TextBenches.corpus(spark, n),
-        "doc_id", "text", TextOps.ShingleK)
+        "doc_id", "text")
       val c = TextOps.prefixCandidates(sets, "doc_id", 8, 10, None).count()
       Caching.release()
       c
