@@ -6,7 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * prints one JSON line {"metric","value","unit","queries","sf"}.
   *
   * Methodology (round-1 verdict "What's wrong #3"): one untimed warm-up
-  * pass over every query first (JIT + code cache + parquet footer cache),
+  * pass over every query first (JIT + code cache + parquet footer cache
+  * + Spark's generated-class cache),
   * then >= 5 timed cache-cold iterations per query; reported number is
   * the median, with per-query [min, max] spread alongside so regressions
   * are distinguishable from sampling noise. The
@@ -85,9 +86,20 @@ object Bench {
       } catch { case _: Throwable => "" }
     val loadBefore = loadavg()
     val wallT0 = System.nanoTime()
-    // warm-up (untimed)
-    names.foreach(runOnce)
     def f(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    // one pass over `names`, with its per-query seconds and the classes
+    // it compiled on one stderr record: the warm-up pass compiles every
+    // plan shape, a timed pass should find them all in Spark's cache
+    def pass(label: String): Seq[(String, Double)] = {
+      val compiled0 = Session.compiles()
+      val round = names.map(n => n -> runOnce(n))
+      val fields = Seq(s""""iter":$label""", Session.compiledSince(compiled0)) ++
+        round.map { case (n, t) => "\"" + n + "\":" + f(t) }
+      System.err.println("[bench] " + fields.mkString("{", ",", "}"))
+      round
+    }
+    // warm-up (untimed)
+    pass("\"warmup\"")
     def summarize(name: String, times: Seq[Double]) = {
       val r =
         if (times.contains(-1.0)) name -> (-1.0, -1.0, -1.0)
@@ -111,12 +123,7 @@ object Bench {
     // round-robin across queries, never per-query blocks: host-load
     // drift hits every query's samples equally (r10: blocks biased the
     // late queries 1.4–1.7×); a partial run still leaves each round
-    val samples = (1 to iters).map { it =>
-      val round = names.map(n => n -> runOnce(n))
-      System.err.println(s"""[bench] {"iter":$it,${round.map { case (n, t) =>
-        "\"" + n + "\":" + f(t) }.mkString(",")}}""")
-      round
-    }
+    val samples = (1 to iters).map(it => pass(it.toString))
     val results = names.map(n => summarize(n, samples.map(_.toMap.apply(n))))
     val total = results.map(_._2._1).filter(_ >= 0).sum
     val wallSec = (System.nanoTime() - wallT0) / 1e9

@@ -31,7 +31,11 @@ object PackRun {
     * clear every cache before it, release after it. Persisted
     * intermediates from an earlier query would otherwise satisfy this
     * one's structurally-equal plans through the CacheManager and
-    * silently time or check warm state.
+    * silently time or check warm state. Cache-cold covers persists and
+    * cached results, not compiled classes: Spark's generated-class
+    * cache is JVM state like JIT code, and a query whose plan shapes
+    * ran before reuses their classes (see `GraftExtensions.register`).
+    * Every execution still recomputes its result from scratch.
     *
     * The `Caching` contract (library persists go through
     * `Caching.persisted`, callers release after the terminal action)

@@ -44,8 +44,12 @@ object Verify {
     val spark = Session.local(cpus, cpus)
     new java.io.File(outDir).mkdirs()
     val only = PackRun.prefixes(args.drop(2).toSeq)
-    PackRun.select(only).foreach(name =>
+    val names = PackRun.select(only)
+    val compiled0 = Session.compiles()
+    names.foreach(name =>
       runQuery(spark, outDir, name, SparkEntry.queries(name), sfDir))
+    // one cold pass: the classes its plan shapes cost a fresh JVM
+    System.err.println(s"""[verify] {"queries":${names.size},${Session.compiledSince(compiled0)}}""")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

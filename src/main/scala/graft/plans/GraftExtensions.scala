@@ -1,9 +1,11 @@
 package graft.plans
 
 import graft.functions.{BloomAgg, BloomMightContain, ByteGridFp, ByteHistogram, CharEntropy, DotProduct, HeavyHitters, JpegSofDims, JsonLongKey, MinHashSig, NearestCentroid, RollingFingerprint, ShingleRows, ShingleSet, SimHash60, TopKByScore, ZOrderKey}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Engine extension point: registers graft's native Catalyst functions.
   *
@@ -12,6 +14,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *     build (the SparkSessionExtensions contract), or
   *   - [[GraftExtensions.register]] on a live session (idempotent) —
   *     used by the query pack because the driver owns its sessions.
+  *     Only this route also sizes Spark's generated-class cache.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -128,9 +131,53 @@ object GraftExtensions {
         ZOrderKey(args)
       }))
 
-  /** Idempotent runtime registration into an existing session. */
-  def register(spark: SparkSession): Unit =
+  /** The size [[register]] raises `spark.sql.codegen.cache.maxEntries`
+    * (Spark's JVM-wide cache of compiled generated classes, default 100)
+    * to. One full pass of the query pack at sf0.1 compiles about 2,350
+    * distinct classes; at 100 entries the cache thrashes and every pass
+    * recompiles them. */
+  val CodegenCacheEntries = 4096
+
+  private val log = org.apache.logging.log4j.LogManager.getLogger(getClass)
+  // whether register already ran in this JVM: only its first call can
+  // find the cache sized by a session it did not set up
+  private val registered = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Idempotent runtime registration into an existing session: graft's
+    * functions, and the generated-class cache size.
+    *
+    * Spark caches compiled generated classes in ONE cache per JVM, sized
+    * once, from `SQLConf.get`, when `CodeGenerator` first initializes
+    * (the first query that generates code). A session that re-runs the
+    * same plan shapes (an interactive session, a benchmark pass) only
+    * reuses them if the cache holds them all, so this raises the
+    * session's `spark.sql.codegen.cache.maxEntries` to at least
+    * [[CodegenCacheEntries]] before anything runs, keeping a larger
+    * value the caller set. The key is a static conf, which the public
+    * `spark.conf.set` rejects, so it is set on the session's own
+    * SQLConf. In local mode the
+    * cache holds each whole-stage class twice: its key includes the
+    * context classloader, and the compile made while the plan is built
+    * and the task thread that runs it use different ones.
+    *
+    * If this JVM compiled generated code before its first `register`,
+    * the cache was sized by that earlier session and this setting comes
+    * too late: that call logs a WARN. Only spark-core's
+    * `CodegenMetrics` is read here, since touching `CodeGenerator`
+    * itself would build the cache at its current size. */
+  def register(spark: SparkSession): Unit = {
+    val conf = spark.sessionState.conf
+    val cacheKey = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+    if (conf.codegenCacheMaxEntries < CodegenCacheEntries)
+      conf.setConfString(cacheKey, CodegenCacheEntries.toString)
+    val late = CodegenMetrics.METRIC_COMPILATION_TIME.getCount > 0
+    if (!registered.getAndSet(true) && late)
+      log.warn("generated code was compiled in this JVM before " +
+        "GraftExtensions.register, so Spark's class cache keeps the size " +
+        s"of that earlier session; $cacheKey=$CodegenCacheEntries " +
+        "only takes effect when set before the first query")
     functions.foreach { case (id, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     }
+  }
 }

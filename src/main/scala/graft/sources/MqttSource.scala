@@ -33,7 +33,7 @@ object MqttSource {
     * DOUBLE (duplicates averaged). `glob` should match the
     * `mqtt.log.YYYYMMDD` files. */
   def load(spark: SparkSession, glob: String): DataFrame = {
-    val parsed = spark.read.text(glob)
+    val parsed = spark.read.text(globFiles(spark, glob): _*)
       .select(from_json(col("value"), schema).as("j"))
       .select(
         col("j.ts").as("ts_s"),

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.nilm.{Labels, NilmDataset}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -34,20 +33,6 @@ object UkdaleSource {
   private val deviceDataType = DevicePowerTypes.map { case (k, v) => k -> v._1 }
   private val deviceUnit = DevicePowerTypes.map { case (k, v) => k -> v._2 }
 
-  /** The `house_* / channel_*.dat` files, listed on the driver through the Hadoop FS
-    * (no Spark job), so the csv reader gets concrete paths — handed the
-    * glob itself, Spark probes it for a streaming-sink metadata
-    * directory and logs a WARN with a FileNotFoundException on every
-    * load. */
-  private def channelFiles(spark: SparkSession, path: String): Seq[String] = {
-    val glob = new Path(s"$path/house_*/channel_*.dat")
-    val files = Option(glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .globStatus(glob)).toSeq.flatten
-      .map(_.getPath.toString).sorted
-    require(files.nonEmpty, s"no UK-DALE channel files match $glob")
-    files
-  }
-
   /** Full load: raw tree → canonical NilmDataset. */
   def load(spark: SparkSession, path: String): NilmDataset = {
     val fileRe = ".*/house_(\\d+)/channel_(\\d+)\\.dat$"
@@ -55,7 +40,7 @@ object UkdaleSource {
       .schema("ts_s LONG, power DOUBLE")
       .option("sep", " ")
       .option("mode", "PERMISSIVE")
-      .csv(channelFiles(spark, path): _*)
+      .csv(globFiles(spark, s"$path/house_*/channel_*.dat"): _*)
       .withColumn("__file", input_file_name())
       // strict channel_N.dat match drops button_press files
       // (UKDALELoader.py:64-65) and malformed names in one predicate
