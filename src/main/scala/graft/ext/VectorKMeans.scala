@@ -306,30 +306,12 @@ object VectorKMeans {
       .agg(sum(col("d"))).collect()(0).getDouble(0)
   }
 
-  /** IVF candidate generation with `nprobe` as a first-class knob
-    * (round-9 verdict #4: `ScaleBench ann` measured nprobe 1/2/4 but the
-    * library had no parameter a user could set — q50 hard-coded its
-    * top-2 cells inline). Every corpus vector is assigned to its
-    * single nearest cell by CENTROID COSINE (one broadcast pass — the
-    * q50 contract, which the DuckDB oracle mirrors); each query row
-    * (`queryPred` over `idCol`) probes its `nprobe` nearest cells and
-    * is scored against exactly the candidates in those cells. Raising
-    * nprobe trades candidate volume for recall monotonically
-    * (nprobe = 1 candidates ⊆ nprobe = 2 ⊆ …, spec-pinned; measured
-    * curve in SCALE.md "ANN recall" / `ScaleBench ann`).
-    *
-    * `e` must carry (`idCol`, `embCol` array<double>, `nrmCol` its L2
-    * norm); self-matches are excluded. Output: (query_id, neighbor_id,
-    * cos) — NOT deduplicated (a neighbor reachable via two probed
-    * cells cannot occur, since assignment is single-cell) and NOT
-    * top-k'd, so callers can count candidates (the at-scale cost) or
-    * rank ([[ivfTopK]]). Scale shape: the probe and query frames are
-    * query-set-sized broadcasts; the only corpus-sized work is the
-    * cell-keyed join — never all-pairs. */
   /** Per-vector centroid cosine similarities (id, cent_id, csim) —
-    * one broadcast of the k×dim centroid table against the corpus. */
-  private def centroidSims(e: DataFrame, idCol: String, embCol: String,
-                           nrmCol: String, model: Model): DataFrame = {
+    * one broadcast of the k×dim centroid table against `e`: the
+    * corpus for [[ivfAssign]], the query rows for [[Ann.Ivf]]'s probe
+    * selection. */
+  private[ext] def centroidSims(e: DataFrame, idCol: String, embCol: String,
+                                nrmCol: String, model: Model): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
     import TextOps.{cosine, l2norm}
@@ -346,58 +328,14 @@ object VectorKMeans {
     * single nearest cell by centroid cosine, as a rank-1 partial
     * top-k pick (map-side combine, not a window sort). The expensive
     * per-model pass: an nprobe SWEEP should compute this once,
-    * persist it (through [[graft.Caching.persisted]]), and hand it to
-    * every [[ivfCandidates]] call via `cells` — otherwise each call
-    * re-pays the corpus × k assignment. */
+    * persist it (through [[graft.Caching.persisted]]), as [[Ann.corpus]]
+    * does for an [[Ann.Ivf]] index, so every search of the corpus reuses
+    * it instead of re-paying the corpus × k assignment. */
   def ivfAssign(e: DataFrame, idCol: String, embCol: String,
                 nrmCol: String, model: Model): DataFrame = {
     graft.plans.GraftExtensions.register(e.sparkSession)
     TextOps.topKPerGroup(centroidSims(e, idCol, embCol, nrmCol, model),
         Seq(idCol), col("csim"), col("cent_id"), 1)
       .select(col(idCol), col("id").as("cell"))
-  }
-
-  def ivfCandidates(e: DataFrame, idCol: String, embCol: String,
-                    nrmCol: String, model: Model, queryPred: Column,
-                    nprobe: Int = 2,
-                    cells: Option[DataFrame] = None): DataFrame = {
-    require(nprobe >= 1 && nprobe <= model.k,
-      s"nprobe=$nprobe must be in [1, k=${model.k}]")
-    graft.plans.GraftExtensions.register(e.sparkSession)
-    import TextOps.{cosine, topKPerGroup}
-    val assigned = e.join(cells.getOrElse(
-      ivfAssign(e, idCol, embCol, nrmCol, model)), idCol)
-    // probe selection is query-set-sized: the predicate pushes below
-    // the centroid join, so only query rows pay the similarity pass
-    val probes = topKPerGroup(
-        centroidSims(e, idCol, embCol, nrmCol, model).filter(queryPred),
-        Seq(idCol), col("csim"), col("cent_id"), nprobe)
-      .select(col(idCol).as("query_id"), col("id").as("cell"))
-    val qvec = e.filter(queryPred)
-      .select(col(idCol).as("query_id"), col(embCol).as("qemb"),
-        col(nrmCol).as("qnrm"))
-    assigned
-      .join(broadcast(probes), Seq("cell"))
-      .join(broadcast(qvec), Seq("query_id"))
-      .filter(col(idCol) =!= col("query_id"))
-      .select(col("query_id"), col(idCol).as("neighbor_id"),
-        cosine(col(embCol), col("qemb"), col(nrmCol), col("qnrm")).as("cos"))
-  }
-
-  /** Top-`k` IVF ANN per query (see [[ivfCandidates]]): ranks the
-    * probed candidates by (cos DESC, neighbor_id ASC) via the partial
-    * top-k aggregate. No dedup pass is needed: a (query, neighbor)
-    * pair arises from at most one probed cell (the neighbor's single
-    * assigned cell), so the candidate frame is duplicate-free by
-    * construction. Output: (query_id, neighbor_id, rank, score). */
-  def ivfTopK(e: DataFrame, idCol: String, embCol: String, nrmCol: String,
-              model: Model, queryPred: Column, nprobe: Int = 2,
-              k: Int = 10, cells: Option[DataFrame] = None): DataFrame = {
-    val scored = ivfCandidates(e, idCol, embCol, nrmCol, model,
-      queryPred, nprobe, cells)
-    TextOps.topKPerGroup(scored, Seq("query_id"),
-        col("cos"), col("neighbor_id"), k)
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        col("rank"), col("score"))
   }
 }

@@ -1,9 +1,9 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ext.{TextOps, TextStats}
+import graft.ext.{Ann, TextOps, TextStats}
 import graft.operators.GlobalAgg
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -77,6 +77,11 @@ object DocumentQueries {
         .orderBy($"doc_id")
     })
   )
+
+  /** The similarity-search corpus: (vec_id, `extra`…, emb array<double>). */
+  private def vectors(s: SparkSession, d: String, extra: Column*): DataFrame =
+    embeddings(s, d).select(col("vec_id") +: extra :+
+      col("embedding").cast("array<double>").as("emb"): _*)
 
   /** The q24 banded-MinHash near-dup pair set (a_id < b_id, exact
     * jaccard `jac` >= 0.5, signature agreement estimate `est_jac`).
@@ -204,54 +209,34 @@ object DocumentQueries {
         .orderBy($"a_id", $"b_id")
     }),
 
-    // Brute-force cosine top-k: the small query set (vec_id < 5) is
-    // broadcast; the big side streams once and ranks via the PARTIAL
-    // top-k aggregate (graft_topk) — map-side keeps <= k rows per query
-    // per task, so the exchange carries k·tasks rows instead of the
-    // whole scored corpus (the row_number window form shuffles and
-    // sorts every scored row). Baseline for the LSH variant below.
+    // Brute-force cosine top-k (Ann.BruteForce): the small query set
+    // (vec_id < 5) is broadcast; the big side streams once and ranks
+    // via the PARTIAL top-k aggregate (graft_topk) — map-side keeps
+    // <= k rows per query per task, so the exchange carries k·tasks
+    // rows instead of the whole scored corpus (the row_number window
+    // form shuffles and sorts every scored row). Baseline for the LSH
+    // variant below.
     "q27_cosine_topk" -> ((s, d) => {
       import s.implicits._
-      graft.plans.GraftExtensions.register(s)
-      val e = embeddings(s, d)
-        .select($"vec_id", $"embedding".cast("array<double>").as("emb"))
-        .withColumn("nrm", l2norm($"emb"))
-      val q = e.filter($"vec_id" < 5)
-        .select($"vec_id".as("query_id"), $"emb".as("qemb"), $"nrm".as("qnrm"))
-      val scored = e.join(broadcast(q), $"vec_id" =!= $"query_id")
-        .select($"query_id", $"vec_id".as("neighbor_id"),
-          cosine($"emb", $"qemb", $"nrm", $"qnrm").as("cos"))
-      topKPerGroup(scored, Seq("query_id"), $"cos", $"neighbor_id", 3)
-        .select($"query_id", $"id".as("neighbor_id"), $"rank",
-          round($"score", 6).as("cosine"))
+      Ann.topK(Ann.corpus(vectors(s, d), "vec_id", "emb", Ann.BruteForce),
+          $"vec_id" < 5, k = 3)
+        .select($"query_id", $"neighbor_id", $"rank", round($"score", 6).as("cosine"))
         .orderBy($"query_id", $"rank")
     }),
 
     // LSH-bucketed ANN: 4 md5-derived Rademacher hyperplanes → 16 sign
     // buckets; candidates and ranking stay within a bucket (the scale
-    // path: bucket-local joins instead of brute force). Bucketing uses
-    // the codegen'd sign-table join (withLshBucket) — identical buckets
-    // to the per-row HOF by construction (parity-tested in
-    // TextOpsSpec), ~1000× cheaper per row; the bucketed frame is
-    // persisted because the query set is a filter of it.
+    // path: bucket-local joins instead of brute force). Ann.Lsh buckets
+    // with the codegen'd sign-table join (TextOps.withLshBucket) —
+    // identical buckets to the per-row HOF by construction
+    // (parity-tested in TextOpsSpec), ~1000× cheaper per row; Ann.corpus
+    // persists the bucketed frame because the query set is a filter of
+    // it.
     "q28_lsh_ann" -> ((s, d) => {
       import s.implicits._
-      graft.plans.GraftExtensions.register(s)
-      val e = graft.Caching.persisted(withLshBucket(
-        embeddings(s, d)
-          .select($"vec_id", $"embedding".cast("array<double>").as("emb"))
-          .withColumn("nrm", l2norm($"emb")),
-        "vec_id", "emb"))
-      val q = e.filter($"vec_id" < 20)
-        .select($"vec_id".as("query_id"), $"emb".as("qemb"),
-          $"nrm".as("qnrm"), $"bucket".as("qbucket"))
-      val scored = e.join(broadcast(q),
-          $"bucket" === $"qbucket" && $"vec_id" =!= $"query_id")
-        .select($"query_id", $"vec_id".as("neighbor_id"),
-          cosine($"emb", $"qemb", $"nrm", $"qnrm").as("cos"))
-      topKPerGroup(scored, Seq("query_id"), $"cos", $"neighbor_id", 3)
-        .select($"query_id", $"id".as("neighbor_id"), $"rank",
-          round($"score", 6).as("cosine"))
+      Ann.topK(Ann.corpus(vectors(s, d), "vec_id", "emb", Ann.Lsh()),
+          $"vec_id" < 20, k = 3)
+        .select($"query_id", $"neighbor_id", $"rank", round($"score", 6).as("cosine"))
         .orderBy($"query_id", $"rank")
     }),
 
@@ -261,29 +246,15 @@ object DocumentQueries {
     // PRE-filter (the predicate restricts the candidate set BEFORE
     // ranking, so top-k is always k-from-eligible) — post-filtering a
     // plain ANN's top-k would return fewer than k and miss eligible
-    // neighbors just outside the unfiltered top-k. Plan-pinned: the
-    // label Filter sits below the bucket join, so ineligible vectors
-    // never enter candidate scoring.
+    // neighbors just outside the unfiltered top-k. Ann's `searchable`
+    // filters the corpus side only (queries are drawn from every
+    // vector); plan-pinned: the label Filter sits below the bucket
+    // join, so ineligible vectors never enter candidate scoring.
     "q126_filtered_ann" -> ((s, d) => {
       import s.implicits._
-      graft.plans.GraftExtensions.register(s)
-      val bucketed = graft.Caching.persisted(withLshBucket(
-        embeddings(s, d)
-          .select($"vec_id", $"label",
-            $"embedding".cast("array<double>").as("emb"))
-          .withColumn("nrm", l2norm($"emb")),
-        "vec_id", "emb"))
-      val q = bucketed.filter($"vec_id" < 20)
-        .select($"vec_id".as("query_id"), $"emb".as("qemb"),
-          $"nrm".as("qnrm"), $"bucket".as("qbucket"))
-      val corpus = bucketed.filter($"label" % 3 === 0)
-      val scored = corpus.join(broadcast(q),
-          $"bucket" === $"qbucket" && $"vec_id" =!= $"query_id")
-        .select($"query_id", $"vec_id".as("neighbor_id"),
-          cosine($"emb", $"qemb", $"nrm", $"qnrm").as("cos"))
-      topKPerGroup(scored, Seq("query_id"), $"cos", $"neighbor_id", 3)
-        .select($"query_id", $"id".as("neighbor_id"), $"rank",
-          round($"score", 6).as("cosine"))
+      Ann.topK(Ann.corpus(vectors(s, d, $"label"), "vec_id", "emb", Ann.Lsh()),
+          $"vec_id" < 20, k = 3, searchable = $"label" % 3 === 0)
+        .select($"query_id", $"neighbor_id", $"rank", round($"score", 6).as("cosine"))
         .orderBy($"query_id", $"rank")
     }),
 
@@ -453,11 +424,11 @@ object DocumentQueries {
     // IVF-style ANN with FITTED centroids: 8 cells from
     // graft.ext.VectorKMeans (deterministic md5-spread init, 2 Lloyd
     // rounds, centroids quantized to 6 decimals so distributed-sum
-    // ulp noise can't make them run-dependent), every vector assigned
-    // to its nearest cell (brute force vs 8 broadcast centroids —
-    // cheap), queries probe their top-2 cells and rank only candidates
-    // in those cells. At scale the centroid count grows ~sqrt(n) and
-    // assignment stays one broadcast pass; the probe join is
+    // ulp noise can't make them run-dependent), then Ann.Ivf: every
+    // vector assigned to its nearest cell (brute force vs 8 broadcast
+    // centroids — cheap), queries probe their top-2 cells and rank only
+    // candidates in those cells. At scale the centroid count grows
+    // ~sqrt(n) and assignment stays one broadcast pass; the probe join is
     // cell-keyed, never all-pairs. The oracle mirrors the fitted
     // centroids as interpolated literals (regenerate with
     // graft.tools.PrintQ50Centroids when testdata changes) — the
@@ -465,19 +436,14 @@ object DocumentQueries {
     // driver's sf0.01 gate.
     "q50_ivf_ann" -> ((s, d) => {
       import s.implicits._
-      graft.plans.GraftExtensions.register(s)
-      val e = graft.Caching.persisted(embeddings(s, d)
-        .select($"vec_id", $"embedding".cast("array<double>").as("emb"))
-        .withColumn("nrm", l2norm($"emb")))
-      val model = graft.ext.VectorKMeans.fit(e.select($"vec_id", $"emb"),
-        "vec_id", "emb", k = 8, iters = 2, quantize = Some(6))
-      // queries probe their 2 nearest cells — nprobe is the library
-      // API knob (graft.ext.VectorKMeans.ivfTopK, round 10); the
+      val e = graft.Caching.persisted(vectors(s, d))
+      val model = graft.ext.VectorKMeans.fit(e, "vec_id", "emb", k = 8,
+        iters = 2, quantize = Some(6))
+      // queries probe their 2 nearest cells (Ann.Ivf's nprobe); the
       // oracle mirrors nprobe = 2
-      graft.ext.VectorKMeans.ivfTopK(e, "vec_id", "emb", "nrm", model,
-          $"vec_id" < 5, nprobe = 2, k = 3)
-        .select($"query_id", $"neighbor_id", $"rank",
-          round($"score", 6).as("cosine"))
+      Ann.topK(Ann.corpus(e, "vec_id", "emb", Ann.Ivf(model, nprobe = 2)),
+          $"vec_id" < 5, k = 3)
+        .select($"query_id", $"neighbor_id", $"rank", round($"score", 6).as("cosine"))
         .orderBy($"query_id", $"rank")
     }),
 
@@ -1712,25 +1678,9 @@ object DocumentQueries {
     // "ANN recall" table (`ScaleBench ann`).
     "q82_lsh_multiprobe" -> ((s, d) => {
       import s.implicits._
-      graft.plans.GraftExtensions.register(s)
-      val e = graft.Caching.persisted(withLshBucket(
-        embeddings(s, d)
-          .select($"vec_id", $"embedding".cast("array<double>").as("emb"))
-          .withColumn("nrm", l2norm($"emb")),
-        "vec_id", "emb"))
-      // a (query, neighbor) pair arises from exactly one probe bucket
-      // (the neighbor's own), so the explode introduces no duplicates
-      val q = e.filter($"vec_id" < 20)
-        .select($"vec_id".as("query_id"), $"emb".as("qemb"),
-          $"nrm".as("qnrm"),
-          explode(graft.ext.TextOps.lshProbeBuckets($"bucket")).as("qbucket"))
-      val scored = e.join(broadcast(q),
-          $"bucket" === $"qbucket" && $"vec_id" =!= $"query_id")
-        .select($"query_id", $"vec_id".as("neighbor_id"),
-          cosine($"emb", $"qemb", $"nrm", $"qnrm").as("cos"))
-      topKPerGroup(scored, Seq("query_id"), $"cos", $"neighbor_id", 3)
-        .select($"query_id", $"id".as("neighbor_id"), $"rank",
-          round($"score", 6).as("cosine"))
+      Ann.topK(Ann.corpus(vectors(s, d), "vec_id", "emb", Ann.Lsh(Ann.Hamming1)),
+          $"vec_id" < 20, k = 3)
+        .select($"query_id", $"neighbor_id", $"rank", round($"score", 6).as("cosine"))
         .orderBy($"query_id", $"rank")
     }),
 
@@ -1746,26 +1696,9 @@ object DocumentQueries {
     // recall-per-candidate vs the full ball: SCALE.md round 10.
     "q83_lsh_margin_probe" -> ((s, d) => {
       import s.implicits._
-      graft.plans.GraftExtensions.register(s)
-      val e = graft.Caching.persisted(graft.ext.TextOps.withLshBucketMargins(
-        embeddings(s, d)
-          .select($"vec_id", $"embedding".cast("array<double>").as("emb"))
-          .withColumn("nrm", l2norm($"emb")),
-        "vec_id", "emb"))
-      // probes are distinct buckets and a neighbor lives in exactly
-      // one, so the explode introduces no duplicate (query, neighbor)
-      val q = e.filter($"vec_id" < 20)
-        .select($"vec_id".as("query_id"), $"emb".as("qemb"),
-          $"nrm".as("qnrm"),
-          explode(graft.ext.TextOps.lshProbeBucketsByMargin(
-            $"bucket", $"margins", probes = 2)).as("qbucket"))
-      val scored = e.join(broadcast(q),
-          $"bucket" === $"qbucket" && $"vec_id" =!= $"query_id")
-        .select($"query_id", $"vec_id".as("neighbor_id"),
-          cosine($"emb", $"qemb", $"nrm", $"qnrm").as("cos"))
-      topKPerGroup(scored, Seq("query_id"), $"cos", $"neighbor_id", 3)
-        .select($"query_id", $"id".as("neighbor_id"), $"rank",
-          round($"score", 6).as("cosine"))
+      Ann.topK(Ann.corpus(vectors(s, d), "vec_id", "emb", Ann.Lsh(Ann.ByMargin(2))),
+          $"vec_id" < 20, k = 3)
+        .select($"query_id", $"neighbor_id", $"rank", round($"score", 6).as("cosine"))
         .orderBy($"query_id", $"rank")
     }),
 
@@ -1781,25 +1714,9 @@ object DocumentQueries {
     // joins, and dedups the same way.
     "q84_lsh_multitable" -> ((s, d) => {
       import s.implicits._
-      graft.plans.GraftExtensions.register(s)
-      val e = graft.Caching.persisted(graft.ext.TextOps.withLshBucketTables(
-        embeddings(s, d)
-          .select($"vec_id", $"embedding".cast("array<double>").as("emb"))
-          .withColumn("nrm", l2norm($"emb")),
-        "vec_id", "emb", tables = 2))
-      val corpus = e.select($"vec_id", $"emb", $"nrm",
-        explode($"buckets").as("bucket"))
-      val q = e.filter($"vec_id" < 20)
-        .select($"vec_id".as("query_id"), $"emb".as("qemb"),
-          $"nrm".as("qnrm"), explode($"buckets").as("qbucket"))
-      val scored = corpus.join(broadcast(q),
-          $"bucket" === $"qbucket" && $"vec_id" =!= $"query_id")
-        .select($"query_id", $"vec_id".as("neighbor_id"),
-          cosine($"emb", $"qemb", $"nrm", $"qnrm").as("cos"))
-      topKPerGroup(scored.distinct(), Seq("query_id"), $"cos",
-          $"neighbor_id", 3)
-        .select($"query_id", $"id".as("neighbor_id"), $"rank",
-          round($"score", 6).as("cosine"))
+      Ann.topK(Ann.corpus(vectors(s, d), "vec_id", "emb", Ann.LshTables(2)),
+          $"vec_id" < 20, k = 3)
+        .select($"query_id", $"neighbor_id", $"rank", round($"score", 6).as("cosine"))
         .orderBy($"query_id", $"rank")
     }),
 
@@ -1818,30 +1735,9 @@ object DocumentQueries {
     // embeddings (per-table md5 plane seeds), independently.
     "q88_lsh_composed" -> ((s, d) => {
       import s.implicits._
-      graft.plans.GraftExtensions.register(s)
-      val e = graft.Caching.persisted(graft.ext.TextOps.withLshBucketTables(
-        embeddings(s, d)
-          .select($"vec_id", $"embedding".cast("array<double>").as("emb"))
-          .withColumn("nrm", l2norm($"emb")),
-        "vec_id", "emb", tables = 2, marginsCol = Some("tmargins")))
-      val corpus = e.select($"vec_id", $"emb", $"nrm",
-        explode($"buckets").as("bucket"))
-      // within one table a neighbor occupies exactly one bucket and the
-      // probe keys are distinct, so duplicates only arise ACROSS tables
-      // — the same cross-table dedup q84 pins
-      val q = e.filter($"vec_id" < 20)
-        .select($"vec_id".as("query_id"), $"emb".as("qemb"),
-          $"nrm".as("qnrm"),
-          explode(graft.ext.TextOps.lshProbeTablesByMargin(
-            $"buckets", $"tmargins", probes = 2)).as("qbucket"))
-      val scored = corpus.join(broadcast(q),
-          $"bucket" === $"qbucket" && $"vec_id" =!= $"query_id")
-        .select($"query_id", $"vec_id".as("neighbor_id"),
-          cosine($"emb", $"qemb", $"nrm", $"qnrm").as("cos"))
-      topKPerGroup(scored.distinct(), Seq("query_id"), $"cos",
-          $"neighbor_id", 3)
-        .select($"query_id", $"id".as("neighbor_id"), $"rank",
-          round($"score", 6).as("cosine"))
+      Ann.topK(Ann.corpus(vectors(s, d), "vec_id", "emb", Ann.LshTables(2, probes = Some(2))),
+          $"vec_id" < 20, k = 3)
+        .select($"query_id", $"neighbor_id", $"rank", round($"score", 6).as("cosine"))
         .orderBy($"query_id", $"rank")
     }),
 
@@ -1901,23 +1797,9 @@ object DocumentQueries {
     // streams once; top-k via the partial bounded-heap aggregate.
     "q87_sq8_adc_topk" -> ((s, d) => {
       import s.implicits._
-      graft.plans.GraftExtensions.register(s)
-      val e = embeddings(s, d)
-        .select($"vec_id", $"embedding".cast("array<double>").as("emb"))
-      val enc = graft.ext.Quantize.sq8Encode(e, "emb")
-      val corpus = enc
-        .select($"vec_id",
-          graft.ext.Quantize.sq8Decode($"qcode", $"qmin", $"qmax").as("remb"))
-        .withColumn("rnrm", l2norm($"remb"))
-      val q = e.filter($"vec_id" < 5)
-        .select($"vec_id".as("query_id"), $"emb".as("qemb"))
-        .withColumn("qnrm", l2norm($"qemb"))
-      val scored = corpus.join(broadcast(q), $"vec_id" =!= $"query_id")
-        .select($"query_id", $"vec_id".as("neighbor_id"),
-          cosine($"remb", $"qemb", $"rnrm", $"qnrm").as("cos"))
-      topKPerGroup(scored, Seq("query_id"), $"cos", $"neighbor_id", 3)
-        .select($"query_id", $"id".as("neighbor_id"), $"rank",
-          round($"score", 6).as("adc_cosine"))
+      Ann.topK(Ann.corpus(vectors(s, d), "vec_id", "emb", Ann.Sq8()),
+          $"vec_id" < 5, k = 3)
+        .select($"query_id", $"neighbor_id", $"rank", round($"score", 6).as("adc_cosine"))
         .orderBy($"query_id", $"rank")
     }),
 

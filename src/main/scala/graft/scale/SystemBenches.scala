@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import graft.{Caching, PackRun, SparkEntry, Tables}
 import graft.ScaleBench._
-import graft.ext.{Quantize, TextOps, VectorKMeans}
+import graft.ext.{Ann, TextOps, VectorKMeans}
 import graft.sources.{Container, RefitSource, UkdaleSource}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -303,19 +303,18 @@ object SystemBenches {
         .as("emb"))
   }
 
-  /** recall@10 of every approximate similarity-search path against
-    * brute force over 50 queries, with the scanned-candidate fraction
-    * (scored pairs / brute-force pairs — at 100 TB the fraction IS the
-    * cost): LSH exact bucket (q28), multi-probe Hamming-1 ball (q82),
-    * margin-ordered probes at T = 1, planes/2, planes, the
-    * OR-construction table sweep L = 1, 2, 4 alone and composed with
-    * T = planes/2 probes (q84; every L slices ONE Lmax bucketing pass),
-    * IVF at nprobe 1/2/4 over 16 fitted cells (q50), full-rank SQ8
-    * asymmetric distance (ext/Quantize: the quantization loss alone),
-    * and the full stack (SQ8-decoded vectors inside the composed
-    * Lmax × T index). Size n = 0 reads the sf embeddings table; n > 0
-    * is a [[syntheticEmbeddings]] corpus (32 dims, n/500 clusters,
-    * noise 0.35). */
+  /** recall@10 of [[graft.ext.Ann]] indexes against brute force over
+    * 50 queries, with the scanned-candidate fraction (candidate pairs /
+    * brute-force pairs — at 100 TB the fraction IS the cost): LSH exact
+    * bucket (q28), Hamming-1 ball (q82), margin probes at T = 1,
+    * planes/2, planes (q83), tables L = 1, 2, 4 alone and with
+    * T = planes/2 probes (q84/q88), IVF nprobe 1/2/4 over 16 fitted
+    * cells (q50), SQ8 asymmetric distance (q87) alone and inside the
+    * Lmax × T index. Each leg searches one of three keyed corpora, so
+    * each keying pass runs once (table t's planes do not depend on L:
+    * the first L of Lmax tables ARE an L-table index). Size n = 0 reads
+    * the sf embeddings table; n > 0 is a [[syntheticEmbeddings]] corpus
+    * (32 dims, n/500 clusters, noise 0.35). */
   val ann: Entry = Entry(Seq(0L),
     Seq(Seq("n", "k", "queries", "cells", "planes", "lsh_exact", "lsh_multiprobe",
       "lsh_mp_margin_t1", "lsh_mp_margin_t2", "lsh_mp_margin_t4",
@@ -325,11 +324,11 @@ object SystemBenches {
     (ctx, nSyn) => {
     val spark = ctx.spark
     import spark.implicits._
-    import TextOps.{cosine, l2norm, lshProbeBuckets, lshProbeBucketsByMargin,
-      topKPerGroup, withLshBucketMargins}
+    import Ann.{ByMargin, LshTables}
     val (k, nQ, kCells, planes, tablesList) = (10, 50L, 16, TextOps.LshPlanes, Seq(1, 2, 4))
     val lMax = tablesList.max
     val tHalf = math.max(planes / 2, 1)
+    val queries = $"vec_id" < nQ
 
     val base =
       if (nSyn > 0) syntheticEmbeddings(spark, nSyn, dim = 32,
@@ -337,88 +336,53 @@ object SystemBenches {
       else Tables.embeddings(spark, ctx.sfDir)
         .select($"vec_id", $"embedding".cast("array<double>").as("emb"))
     // margins ride along the same grouped sums; only queries read them
-    val e = Caching.persisted(withLshBucketMargins(
-      base.withColumn("nrm", l2norm($"emb")), "vec_id", "emb", planes = planes))
-    val n = e.count()
-    val qvec = e.filter($"vec_id" < nQ)
-      .select($"vec_id".as("query_id"), $"emb".as("qemb"),
-        $"nrm".as("qnrm"), $"bucket".as("qbucket"), $"margins".as("qmargins"))
+    val single = Ann.corpus(base, "vec_id", "emb", Ann.Lsh(ByMargin(planes)))
+    val n = single.vectors.count()
 
-    def topK(scored: DataFrame): Map[Long, Set[Long]] =
-      topKPerGroup(scored, Seq("query_id"), col("cos"), col("neighbor_id"), k)
-        .select($"query_id", $"id").as[(Long, Long)].collect()
+    def topSets(c: Ann.Corpus): Map[Long, Set[Long]] =
+      Ann.topK(c, queries, k).select($"query_id", $"neighbor_id")
+        .as[(Long, Long)].collect()
         .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).toSet }
-    def scoredBy(pairs: DataFrame, emb: String = "emb", nrm: String = "nrm") =
-      pairs.select($"query_id", $"vec_id".as("neighbor_id"),
-        cosine(col(emb), $"qemb", col(nrm), $"qnrm").as("cos"))
-    // ground truth: brute force (the q27 shape at k)
-    val truth = topK(scoredBy(e.join(broadcast(qvec.drop("qbucket", "qmargins")),
-      $"vec_id" =!= $"query_id")))
-    /** {recall@k vs truth, scanned fraction} of a scored frame; it is
-      * acted on twice, so persisted (the join would recompute every
-      * cosine). */
-    def measure(scoredIn: DataFrame): Record = {
-      val scored = Caching.persisted(scoredIn)
-      val cands = scored.count()
-      val top = topK(scored.distinct())
+    val truth = topSets(single.probedBy(Ann.BruteForce))
+    /** {recall@k vs truth, scanned fraction} of one search. The
+      * candidates are counted and ranked, so persisted: `topK`'s
+      * identical candidate plan reads the cache, not the key join. */
+    def measure(c: Ann.Corpus): Record = {
+      val cands = Caching.persisted(Ann.candidates(c, queries)).count()
+      val top = topSets(c)
       val recall = truth.map { case (q, t) =>
         top.getOrElse(q, Set.empty[Long]).count(t).toDouble / t.size
       }.sum / truth.size
       // fractions sit at 1e-4..1e-7 at the 1 M-vector operating point
       Seq("recall" -> Fixed(recall, 4), "cand_frac" -> Fixed(cands.toDouble / (nQ * (n - 1)), 8))
     }
-    def probe(corpus: DataFrame, probes: DataFrame, key: String = "qbucket") =
-      measure(scoredBy(corpus.join(broadcast(probes),
-        $"bucket" === col(key) && $"vec_id" =!= $"query_id")))
 
-    val lshExact = probe(e, qvec)
-    val multiprobe = probe(e, qvec.select($"query_id", $"qemb", $"qnrm",
-      explode(lshProbeBuckets($"qbucket", planes)).as("pbucket")), "pbucket")
+    val lshExact = measure(single.probedBy(Ann.Lsh()))
+    val multiprobe = measure(single.probedBy(Ann.Lsh(Ann.Hamming1)))
     val margin = Seq(1, planes / 2, planes).filter(_ >= 1).distinct.sorted.map { t =>
-      s"lsh_mp_margin_t$t" -> probe(e, qvec.select($"query_id", $"qemb", $"qnrm",
-        explode(lshProbeBucketsByMargin($"qbucket", $"qmargins", t)).as("pbucket")),
-        "pbucket")
+      s"lsh_mp_margin_t$t" -> measure(single.probedBy(Ann.Lsh(ByMargin(t))))
     }
 
-    val et = Caching.persisted(TextOps.withLshBucketTables(
-      base.withColumn("nrm", l2norm($"emb")), "vec_id", "emb", planes = planes,
-      tables = lMax, marginsCol = Some("tmargins")))
-    def tableCorpus(l: Int) = et.select($"vec_id", $"emb", $"nrm",
-      explode(slice($"buckets", 1, l)).as("bucket"))
-    def tableQueries(l: Int, composed: Boolean) = et.filter($"vec_id" < nQ)
-      .select($"vec_id".as("query_id"), $"emb".as("qemb"), $"nrm".as("qnrm"),
-        explode(
-          if (composed) TextOps.lshProbeTablesByMargin(
-            slice($"buckets", 1, l), slice($"tmargins", 1, l), tHalf)
-          else slice($"buckets", 1, l)).as("qbucket"))
+    val tabled = Ann.corpus(base, "vec_id", "emb", LshTables(lMax, Some(tHalf)))
     val tables = tablesList.map { l =>
-      s"lsh_tables_l$l" -> probe(tableCorpus(l), tableQueries(l, composed = false))
+      s"lsh_tables_l$l" -> measure(tabled.probedBy(LshTables(l)))
     } ++ tablesList.map { l =>
-      s"lsh_tables_l${l}_margin_t$tHalf" -> probe(tableCorpus(l), tableQueries(l, composed = true))
+      s"lsh_tables_l${l}_margin_t$tHalf" ->
+        measure(tabled.probedBy(LshTables(l, Some(tHalf))))
     }
 
-    // IVF through the library API: the corpus-wide cell assignment is
-    // computed once and shared across the nprobe sweep
-    val model = VectorKMeans.fit(e.select($"vec_id", $"emb"), "vec_id", "emb",
-      k = kCells, iters = 2)
-    val cells = Caching.persisted(VectorKMeans.ivfAssign(e, "vec_id", "emb", "nrm", model))
+    // one fitted model and one cell assignment for the nprobe sweep
+    val vecs = single.vectors.select($"vec_id", $"emb")
+    val model = VectorKMeans.fit(vecs, "vec_id", "emb", k = kCells, iters = 2)
+    val celled = Ann.corpus(vecs, "vec_id", "emb", Ann.Ivf(model, 1)).cellsPersisted
     val ivf = Seq(1, 2, 4).map { p =>
-      s"ivf_p$p" -> measure(VectorKMeans.ivfCandidates(e, "vec_id", "emb", "nrm",
-        model, $"vec_id" < nQ, nprobe = p, cells = Some(cells)))
+      s"ivf_p$p" -> measure(celled.probedBy(Ann.Ivf(model, p)))
     }
 
     // SQ8: rank by float query × decoded-int8 corpus cosine; index
     // keys stay float-derived (assigned at ingest, before quantization)
-    val rec = Quantize.sq8Encode(e.select($"vec_id", $"emb"), "emb")
-      .select($"vec_id", Quantize.sq8Decode($"qcode", $"qmin", $"qmax").as("remb"))
-      .withColumn("rnrm", l2norm($"remb"))
-    val sq8 = measure(scoredBy(rec.join(broadcast(qvec.drop("qbucket", "qmargins")),
-      $"vec_id" =!= $"query_id"), "remb", "rnrm"))
-    val sq8Stack = measure(scoredBy(
-      et.select($"vec_id", explode(slice($"buckets", 1, lMax)).as("bucket"))
-        .join(rec, "vec_id")
-        .join(broadcast(tableQueries(lMax, composed = true)),
-          $"bucket" === $"qbucket" && $"vec_id" =!= $"query_id"), "remb", "rnrm"))
+    val sq8 = measure(single.probedBy(Ann.Sq8()))
+    val sq8Stack = measure(tabled.probedBy(Ann.Sq8(LshTables(lMax, Some(tHalf)))))
     Caching.release()
 
     Seq(Seq("n" -> n, "k" -> k, "queries" -> nQ, "cells" -> kCells, "planes" -> planes,

@@ -155,10 +155,12 @@ object OlaSource {
     NilmDataset(readings, channels)
   }
 
-  /** Converted-parquet entry point (see `tools/h5_to_parquet.py`). */
+  /** Converted-parquet entry point (see `tools/h5_to_parquet.py`).
+    * Either frame may be absent; one that exists but cannot be read
+    * fails the load. */
   def loadConverted(spark: SparkSession, path: String): NilmDataset = {
     def opt(p: String) =
-      try spark.read.parquet(p) catch { case _: Exception => null }
+      if (pathExists(spark, p)) spark.read.parquet(p) else null
     load(spark, opt(s"$path/shelly_data.parquet"),
       opt(s"$path/emonesp_data.parquet"))
   }

@@ -18,4 +18,12 @@ package object sources {
     require(files.nonEmpty, s"no files match $glob")
     files
   }
+
+  /** Whether `path` exists, asked of the Hadoop FS (no Spark job): an
+    * optional input is skipped without a reader's FileStreamSink WARN,
+    * and a read error is never mistaken for absence. */
+  private[sources] def pathExists(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
 }

@@ -118,4 +118,26 @@ class OlaSourceSpec extends SparkSpec {
       .orderBy("ts").select($"power").as[Double].collect().toSeq
     assert(agg == Seq(110.0, 121.0, 132.0))
   }
+
+  test("loadConverted: a missing converted frame loads the other one") {
+    val base = java.nio.file.Files.createTempDirectory("ola_conv")
+    emon.write.parquet(base.resolve("emonesp_data.parquet").toString)
+    val ds = OlaSource.loadConverted(spark, base.toString)
+    assert(ds.channels.select("channel_id").as[String].collect().sorted.toSeq ==
+      Seq("aggregate", "emonesp_heater_PF", "emonesp_heater_Q", "emonesp_heater_W"))
+    val agg = ds.readings.filter($"channel_id" === "aggregate")
+      .orderBy("ts").select($"power").as[Double].collect().toSeq
+    assert(agg == Seq(50.0, 60.0, 70.0))
+  }
+
+  test("loadConverted: a converted frame that cannot be read fails the load") {
+    // present but corrupt (no parquet footer): an error, not "absent"
+    val base = java.nio.file.Files.createTempDirectory("ola_conv")
+    shelly.write.parquet(base.resolve("shelly_data.parquet").toString)
+    java.nio.file.Files.write(base.resolve("emonesp_data.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    intercept[Exception] {
+      OlaSource.loadConverted(spark, base.toString).readings.count()
+    }
+  }
 }

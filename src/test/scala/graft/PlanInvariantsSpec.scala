@@ -277,6 +277,36 @@ class PlanInvariantsSpec extends SparkSpec {
     assert(!p.contains("Window"), p)
   }
 
+  test("q84 multitable lsh: bucket hash join, cross-table dedup before graft_topk") {
+    val p = plan("q84_lsh_multitable")
+    // the exploded table keys must stay an equi-join key behind a hash
+    // join carrying the self-match exclusion — never a nested loop
+    assert("BroadcastHashJoin \\[(?!vec_id)[^\\]]*\\], \\[[^\\]]*\\], Inner, BuildRight, NOT \\(vec_id"
+      .r.findFirstIn(p).nonEmpty, p)
+    assert(!p.contains("CartesianProduct"), p)
+    assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    assert(!p.contains("Window"), p)
+    // a pair colliding in both tables is dropped BEFORE ranking: the
+    // (query, neighbor, cos) grouping prints below the partial top-k
+    val dedup = "HashAggregate\\(keys=\\[query_id#\\d+L, neighbor_id#\\d+L, [^\\]]*cos#\\d+\\], functions=\\[\\]"
+      .r.findFirstMatchIn(p).map(_.start).getOrElse(-1)
+    val topk = p.indexOf("partial_graft_topk")
+    assert(topk >= 0 && dedup > topk, s"dedup aggregate must feed graft_topk:\n$p")
+  }
+
+  test("q87 sq8 adc: broadcast query side, partial graft_topk, no window") {
+    val p = plan("q87_sq8_adc_topk")
+    // brute-force ADC over the decoded corpus: the 5-row float query
+    // set is the broadcast build side, the corpus streams once into
+    // the map-side bounded top-k
+    assert(p.contains("BroadcastNestedLoopJoin BuildRight"), p)
+    val bcast = p.indexOf("BroadcastExchange")
+    assert(bcast >= 0 && p.substring(bcast).contains("< 5)"),
+      s"the broadcast side must be the query set:\n$p")
+    assert(p.contains("partial_graft_topk"), p)
+    assert(!p.contains("Window"), p)
+  }
+
   test("flagship hot paths stay inside whole-stage codegen") {
     // the 100 TB throughput guard the bench can only show as a slow
     // number later: every HashAggregate and Project on these scan→agg

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ext.VectorKMeans
+import graft.ext.{Ann, VectorKMeans}
 import org.apache.spark.sql.functions._
 
 /** Lloyd's k-means: separable blobs resolve to their true clusters,
@@ -316,16 +316,17 @@ class VectorKMeansSpec extends SparkSpec {
       .withColumn("nrm", l2norm($"emb"))
     val model = VectorKMeans.fit(df, "vec_id", "emb", k = 3, iters = 3)
     val pred = col("vec_id") < 5
+    val corpus = Ann.corpus(df, "vec_id", "emb", Ann.Ivf(model, 1))
+    def probing(p: Int) = corpus.probedBy(Ann.Ivf(model, p))
     val candSets = (1 to 3).map { p =>
-      VectorKMeans.ivfCandidates(df, "vec_id", "emb", "nrm", model, pred, p)
+      Ann.candidates(probing(p), pred)
         .select($"query_id", $"neighbor_id").as[(Long, Long)].collect().toSet
     }
     assert(candSets(0).subsetOf(candSets(1)) && candSets(1).subsetOf(candSets(2)),
       "nprobe candidate sets must be nested")
     // nprobe = k scores every (query, other) pair
     assert(candSets(2).size == 5 * (30 - 1))
-    val ivfAll = VectorKMeans.ivfTopK(df, "vec_id", "emb", "nrm", model,
-        pred, nprobe = 3, k = 4)
+    val ivfAll = Ann.topK(probing(3), pred, k = 4)
       .select($"query_id", $"neighbor_id", $"rank").as[(Long, Long, Long)]
       .collect().toSet
     val brute = graft.ext.TextOps.topKPerGroup(
@@ -340,11 +341,12 @@ class VectorKMeansSpec extends SparkSpec {
     assert(ivfAll == brute, "nprobe=k must equal exact search")
     // the knob is validated
     intercept[IllegalArgumentException] {
-      VectorKMeans.ivfCandidates(df, "vec_id", "emb", "nrm", model, pred, 0)
+      Ann.candidates(probing(0), pred)
     }
     intercept[IllegalArgumentException] {
-      VectorKMeans.ivfCandidates(df, "vec_id", "emb", "nrm", model, pred, 4)
+      Ann.candidates(probing(4), pred)
     }
+    Caching.release()
   }
 
   test("fit on sf0.01 reproduces the q50 oracle's embedded literals") {
