@@ -120,7 +120,8 @@ object Ann {
       case LshTables(tables, probes) => (Caching.persisted(TextOps.withLshBucketTables(
         normed, idCol, embCol, tables = tables, bucketsCol = buckets,
         marginsCol = probes.map(_ => tmargins))), None)
-      case Ivf(model, _) => (normed, Some(VectorKMeans.ivfAssign(normed, idCol, embCol, nrm, model)))
+      case Ivf(model, _) => (normed, Some(VectorKMeans.ivfAssign(
+        normed, idCol, embCol, nrm, model.centroidFrame(df.sparkSession))))
     }
     val (vectors, cells) = keyed(index)
     new Corpus(vectors, idCol, embCol, index, index, cells)
@@ -168,8 +169,8 @@ object Ann {
       })
       case Ivf(model, nprobe) =>
         // only the query rows pay the centroid similarity pass
-        val probes = TextOps.topKPerGroup(VectorKMeans.centroidSims(
-            queries, corpus.idCol, corpus.embCol, nrm, model),
+        val probes = TextOps.topKPerGroup(VectorKMeans.centroidSims(queries,
+            corpus.idCol, corpus.embCol, nrm, model.centroidFrame(queries.sparkSession)),
             Seq(corpus.idCol), col("csim"), col("cent_id"), nprobe)
           .select(id.as("query_id"), col("id").as("cell"))
         side.join(corpus.cells.get, corpus.idCol)

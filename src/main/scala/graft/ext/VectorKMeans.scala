@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed Lloyd's k-means over an `array<double>` embedding column
@@ -69,6 +69,15 @@ object VectorKMeans {
     def assign(df: DataFrame, embCol: String): DataFrame = {
       graft.plans.GraftExtensions.register(df.sparkSession)
       df.withColumn("cluster", assignExpr(col(embCol)))
+    }
+
+    /** The centroids as a local frame (cent_id, cemb, cnrm) — what
+      * [[centroidSims]] and [[ivfAssign]] broadcast. */
+    def centroidFrame(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      centroids.toSeq.map { case (cid, c) => (cid.toLong, c.toSeq) }
+        .toDF("cent_id", "cemb")
+        .withColumn("cnrm", TextOps.l2norm(col("cemb")))
     }
   }
 
@@ -307,34 +316,28 @@ object VectorKMeans {
   }
 
   /** Per-vector centroid cosine similarities (id, cent_id, csim) —
-    * one broadcast of the k×dim centroid table against `e`: the
+    * one broadcast of the centroid frame `cent` (cent_id, cemb, cnrm;
+    * [[Model.centroidFrame]] for a fitted model) against `e`: the
     * corpus for [[ivfAssign]], the query rows for [[Ann.Ivf]]'s probe
     * selection. */
   private[ext] def centroidSims(e: DataFrame, idCol: String, embCol: String,
-                                nrmCol: String, model: Model): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    import TextOps.{cosine, l2norm}
-    val cent = model.centroids.toSeq
-      .map { case (cid, c) => (cid.toLong, c.toSeq) }
-      .toDF("cent_id", "cemb")
-      .withColumn("cnrm", l2norm(col("cemb")))
+                                nrmCol: String, cent: DataFrame): DataFrame =
     e.join(broadcast(cent))
       .select(col(idCol), col("cent_id"),
-        cosine(col(embCol), col("cemb"), col(nrmCol), col("cnrm")).as("csim"))
-  }
+        TextOps.cosine(col(embCol), col("cemb"), col(nrmCol), col("cnrm")).as("csim"))
 
   /** Corpus-wide IVF cell assignment: (`idCol`, cell) — each vector's
-    * single nearest cell by centroid cosine, as a rank-1 partial
-    * top-k pick (map-side combine, not a window sort). The expensive
-    * per-model pass: an nprobe SWEEP should compute this once,
-    * persist it (through [[graft.Caching.persisted]]), as [[Ann.corpus]]
-    * does for an [[Ann.Ivf]] index, so every search of the corpus reuses
-    * it instead of re-paying the corpus × k assignment. */
+    * single nearest centroid of `cent` (see [[centroidSims]]) by
+    * cosine, as a rank-1 partial top-k pick (map-side combine, not a
+    * window sort). The expensive per-model pass: an nprobe SWEEP should
+    * compute this once, persist it (through [[graft.Caching.persisted]]),
+    * as [[Ann.corpus]] does for an [[Ann.Ivf]] index, so every search of
+    * the corpus reuses it instead of re-paying the corpus × k
+    * assignment. */
   def ivfAssign(e: DataFrame, idCol: String, embCol: String,
-                nrmCol: String, model: Model): DataFrame = {
+                nrmCol: String, cent: DataFrame): DataFrame = {
     graft.plans.GraftExtensions.register(e.sparkSession)
-    TextOps.topKPerGroup(centroidSims(e, idCol, embCol, nrmCol, model),
+    TextOps.topKPerGroup(centroidSims(e, idCol, embCol, nrmCol, cent),
         Seq(idCol), col("csim"), col("cent_id"), 1)
       .select(col(idCol), col("id").as("cell"))
   }

@@ -5,14 +5,13 @@ import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DoubleType
-import scala.collection.mutable.ArrayBuffer
 
 /** On/off-series postprocessing operators from the reference's
   * disaggregation pipeline (`bert_single_appliance/postprocessing.py`):
   * binary thresholding, run-length analysis, minimum-duration run
   * zeroing, and sliding-median / EWMA smoothing — each one key shuffle
-  * (a window composition, or for the median one sorted sweep per key)
-  * instead of the reference's driver-side numpy scans.
+  * (a window composition, or for the two smoothers one shared sorted
+  * sweep per key) instead of the reference's driver-side numpy scans.
   */
 object Postprocess {
 
@@ -81,44 +80,32 @@ object Postprocess {
     * compares. Null values are skipped; an all-null frame yields null.
     * Appends `median_value` (double; `value` is cast to double).
     *
-    * One form for every k: `repartition(key)` + `sortWithinPartitions(key,
-    * orderCols…)` + one sweep per key with a dual-heap (lazy-deletion)
-    * order-statistic structure — O(log k) per row, one hash exchange on
-    * the key. The window compositions it replaced (lag/lead columns for
-    * k ≤ 8, an `array_sort(collect_list)` frame beyond) re-buffer and
-    * re-sort the 2k+1 frame per row and lost at every measured size, k = 2
-    * included (SCALE.md `median`). `orderCols` are taken as given, so
-    * `.desc` works; per-key data must fit a task — the same bound every
-    * ordered-window operator carries. */
+    * One form for every k: the keyed [[sweep]] with a dual-heap
+    * (lazy-deletion) order-statistic structure — O(log k) per row. The
+    * window compositions it replaced (lag/lead columns for k ≤ 8, an
+    * `array_sort(collect_list)` frame beyond) re-buffer and re-sort the
+    * 2k+1 frame per row and lost at every measured size, k = 2 included
+    * (SCALE.md `median`). */
   def slidingMedian(df: DataFrame, key: Column, orderCols: Seq[Column],
                     value: Column, k: Int): DataFrame = {
     require(k >= 0, s"k must be >= 0, got $k")
-    // the key and the double value ride after the caller's columns, so
-    // the sweep reads them at fixed indices and emits only the first `width`
-    val width = df.schema.length
-    val outSchema = df.schema.add("median_value", DoubleType, nullable = true)
-    df.withColumn(KeyCol, key).withColumn(ValueCol, value.cast("double"))
-      .repartition(col(KeyCol))
-      .sortWithinPartitions(col(KeyCol) +: orderCols: _*)
-      .mapPartitions { rows =>
-        // consecutive same-key runs (the sort guarantees adjacency);
-        // buffer one key's rows, emit its medians, move on — memory is
-        // bounded by the largest single key, as in any window operator
-        val it = rows.buffered
-        new Iterator[Row] {
-          private var out: Iterator[Row] = Iterator.empty
-          def hasNext: Boolean = out.hasNext || it.hasNext
-          def next(): Row = {
-            if (!out.hasNext) {
-              val k0 = it.head.get(width)
-              val buf = ArrayBuffer.empty[Row]
-              while (it.hasNext && it.head.get(width) == k0) buf += it.next()
-              out = emitKey(buf, width, k).iterator
-            }
-            out.next()
-          }
+    sweep(df, key, orderCols, value, "median_value") { it =>
+      val vs = it.toArray // the frame reaches k rows ahead
+      val heap = new DualMedianHeap
+      var added = -1 // highest row index whose value is in the heap
+      var removed = 0 // lowest row index not yet evicted
+      vs.indices.iterator.map { i =>
+        while (added < math.min(vs.length - 1, i + k)) {
+          added += 1
+          if (vs(added) ne null) heap.add(vs(added))
         }
-      }(Encoders.row(outSchema))
+        while (removed < i - k) {
+          if (vs(removed) ne null) heap.remove(vs(removed))
+          removed += 1
+        }
+        heap.medianOrNull
+      }
+    }
   }
 
   /** Trailing exponentially-weighted moving average over the last
@@ -131,51 +118,40 @@ object Postprocess {
     * the first rows of a key are well-defined (no warm-up NaNs) and
     * the bounded frame keeps the state O(span), unlike the recursive
     * `adjust=False` form whose tail never truncates (a sequential
-    * recursion Spark cannot parallelize without a prefix scan).
+    * recursion Spark cannot parallelize without a prefix scan). A null
+    * value keeps its slot in the frame but adds to neither sum (pandas
+    * `ignore_na=False`); an all-null frame yields null.
     *
-    * Scale shape: one keyed window (hash exchange + in-partition sort
-    * — same wide cost as every per-key ordered op here). span ≤ 16
-    * evaluates as codegen'd lag columns (no per-row buffer; measured
-    * 5.2× faster than the array form at span 10 on 10-30 M rows —
-    * `ScaleBench ewma`, SCALE.md round 17); larger spans buffer the frame
-    * with collect_list and fold. Each branch sums its terms in a fixed
-    * sequential order, so the result is bit-stable across
-    * partitionings (the two branches differ from EACH OTHER in
-    * association order — value-equal to ~1e-15 relative, parity
-    * spec-pinned).
-    * Precondition: non-null `value` (a null would misalign the
-    * weights). Adds `ewma`. */
+    * The keyed [[sweep]] with a ring of the last `span` values: each row
+    * sums its terms newest first, starting from its own value's term, so
+    * the result is bit-stable across partitionings and equals the lag
+    * composition `Σ_j (1−α)^j·lag(value, j)` this form replaced (q109's
+    * oracle sums in the same order). Adds `ewma` (double). */
   def ewma(df: DataFrame, key: Column, orderCols: Seq[Column],
            value: Column, alpha: Double, span: Int): DataFrame = {
     require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
     require(span >= 1, s"span must be >= 1, got $span")
-    val w = Window.partitionBy(key).orderBy(orderCols: _*)
-    if (span <= 16) {
-      // Small span: codegen'd lag columns instead of a per-row
-      // collect_list buffer — measured 5.2× faster at span 10 on 10-30 M
-      // rows (`ScaleBench ewma`, SCALE.md round 17). Missing lags (first
-      // rows of a key) contribute exactly 0.0 to both sums, appended at the TAIL
-      // of the left-to-right reduction, so the value is bit-identical
-      // to folding only the available newest-first terms.
-      val num = (0 until span).map { j =>
-        coalesce(lag(value, j).over(w) * math.pow(1 - alpha, j), lit(0.0))
-      }.reduce(_ + _)
-      val den = (0 until span).map { j =>
-        when(lag(value, j).over(w).isNotNull,
-          lit(math.pow(1 - alpha, j))).otherwise(lit(0.0))
-      }.reduce(_ + _)
-      df.withColumn("ewma", num / den)
-    } else {
-      val wf = w.rowsBetween(-(span - 1), 0)
-      val vals = collect_list(value).over(wf)
-      val n = size(vals)
-      def fold(weighted: Column) =
-        aggregate(weighted, lit(0.0), (acc, x) => acc + x)
-      val num = fold(zip_with(vals, sequence(lit(1), n),
-        (x, i) => x * pow(lit(1 - alpha), (n - i).cast("double"))))
-      val den = fold(transform(sequence(lit(1), n),
-        i => pow(lit(1 - alpha), (n - i).cast("double"))))
-      df.withColumn("ewma", num / den)
+    val wts = Array.tabulate(span)(j => math.pow(1 - alpha, j))
+    sweep(df, key, orderCols, value, "ewma") { vs =>
+      // the key's last `span` values, newest at `head`; the slots before
+      // its first row stay null and add nothing
+      val ring = new Array[java.lang.Double](span)
+      var head = span - 1
+      vs.map { v =>
+        head = if (head == span - 1) 0 else head + 1
+        ring(head) = v
+        var num = 0.0
+        var den = 0.0
+        var p = head
+        var j = 0
+        while (j < span) {
+          val x = ring(p)
+          if (x ne null) { num += x * wts(j); den += wts(j) }
+          p = if (p == 0) span - 1 else p - 1
+          j += 1
+        }
+        if (den == 0.0) null else java.lang.Double.valueOf(num / den)
+      }
     }
   }
 
@@ -228,36 +204,59 @@ object Postprocess {
       element_at(array_sort(padded), kl + 1))
   }
 
-  /** One key's rows → their first `width` fields + the sliding median of
-    * field `width + 1`, dual-heap sweep. */
-  private def emitKey(rows: ArrayBuffer[Row], width: Int, k: Int): Seq[Row] = {
-    val valueIdx = width + 1
-    val n = rows.length
-    val heap = new DualMedianHeap
-    var added = -1 // highest row index whose value is in the heap
-    var removed = 0 // lowest row index not yet evicted
-    val out = new ArrayBuffer[Row](n)
-    var i = 0
-    while (i < n) {
-      while (added < math.min(n - 1, i + k)) {
-        added += 1
-        val r = rows(added)
-        if (!r.isNullAt(valueIdx)) heap.add(r.getDouble(valueIdx))
-      }
-      while (removed < i - k) {
-        val r = rows(removed)
-        if (!r.isNullAt(valueIdx)) heap.remove(r.getDouble(valueIdx))
-        removed += 1
-      }
-      val r = rows(i)
-      val fields = new Array[Any](width + 1)
-      var j = 0
-      while (j < width) { fields(j) = r.get(j); j += 1 }
-      fields(width) = heap.medianOrNull
-      out += new GenericRow(fields)
-      i += 1
-    }
-    out.toSeq
+  /** The sorted per-key sweep both smoothing operators run: one hash
+    * exchange on `key`, `sortWithinPartitions(key, orderCols…)`
+    * (`orderCols` as given, so `.desc` works), then each key's rows in
+    * order. `kernel` maps the key's values (`value` cast to double, null
+    * kept) to one output per row, in order; each row comes back as the
+    * caller's columns plus `outCol` (double). A row waits in a queue
+    * until the kernel has emitted its output, so memory follows how far
+    * ahead the kernel reads: one row for [[ewma]], the whole key for
+    * [[slidingMedian]] (per-key data must fit a task — the bound every
+    * ordered-window operator carries). The sweep is opaque to column
+    * pruning: project the input first. */
+  private def sweep(df: DataFrame, key: Column, orderCols: Seq[Column],
+                    value: Column, outCol: String)(
+      kernel: Iterator[java.lang.Double] => Iterator[java.lang.Double]): DataFrame = {
+    // the key and the double value are appended after the sort (they do
+    // not cross the exchange) and ride after the caller's columns, so the
+    // sweep reads them at fixed indices and emits only the first `width`
+    val width = df.schema.length
+    val outSchema = df.schema.add(outCol, DoubleType, nullable = true)
+    df.repartition(key)
+      .sortWithinPartitions(key +: orderCols: _*)
+      .withColumn(KeyCol, key).withColumn(ValueCol, value.cast("double"))
+      .mapPartitions { rows =>
+        // consecutive same-key runs (the sort guarantees adjacency)
+        val it = rows.buffered
+        new Iterator[Row] {
+          private var out: Iterator[Row] = Iterator.empty
+          def hasNext: Boolean = out.hasNext || it.hasNext
+          def next(): Row = {
+            if (!out.hasNext) {
+              val k0 = it.head.get(width)
+              val pending = new java.util.ArrayDeque[Row]()
+              val values = new Iterator[java.lang.Double] {
+                def hasNext: Boolean = it.hasNext && it.head.get(width) == k0
+                def next(): java.lang.Double = {
+                  val r = it.next()
+                  pending.add(r)
+                  r.getAs[java.lang.Double](width + 1)
+                }
+              }
+              out = kernel(values).map { v =>
+                val r = pending.poll()
+                val fields = new Array[Any](width + 1)
+                var j = 0
+                while (j < width) { fields(j) = r.get(j); j += 1 }
+                fields(width) = v
+                new GenericRow(fields)
+              }
+            }
+            out.next()
+          }
+        }
+      }(Encoders.row(outSchema))
   }
 
   /** Order-statistic multiset for a sliding frame: max-heap `lo` holds

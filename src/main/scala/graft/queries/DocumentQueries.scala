@@ -1593,9 +1593,9 @@ object DocumentQueries {
     // near-duplicates WITHIN each cluster only — the cluster key plays
     // the LSH-bucket role, so candidates never come from an all-pairs
     // join. Cells here use the first-k deterministic centroids (the
-    // oracle replicates them bit-for-bit from the table itself);
-    // production swaps in ext/VectorKMeans fitted centroids, exactly
-    // as q50 now does. Output: each dropped vector with
+    // oracle replicates them bit-for-bit from the table itself),
+    // assigned by the same VectorKMeans.ivfAssign pass q50's IVF corpus
+    // runs over its fitted centroids. Output: each dropped vector with
     // its cell, its keeper (lowest same-cell id it duplicates), and
     // the strongest cosine that condemned it.
     "q76_semantic_dedup" -> ((s, d) => {
@@ -1606,11 +1606,7 @@ object DocumentQueries {
         .withColumn("nrm", l2norm($"emb")))
       val cent = e.filter($"vec_id" < 8)
         .select($"vec_id".as("cent_id"), $"emb".as("cemb"), $"nrm".as("cnrm"))
-      val simToCent = e.join(broadcast(cent))
-        .select($"vec_id", $"cent_id",
-          cosine($"emb", $"cemb", $"nrm", $"cnrm").as("csim"))
-      val cells = topKPerGroup(simToCent, Seq("vec_id"), $"csim", $"cent_id", 1)
-        .select($"vec_id", $"id".as("cell"))
+      val cells = graft.ext.VectorKMeans.ivfAssign(e, "vec_id", "emb", "nrm", cent)
       // persist: the cell-assigned frame feeds BOTH sides of the
       // intra-cell self-join
       val a = graft.Caching.persisted(e.join(cells, "vec_id"))

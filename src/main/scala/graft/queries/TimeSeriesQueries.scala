@@ -330,10 +330,10 @@ object TimeSeriesQueries {
     // Trailing EWMA smoothing (operators/Postprocess.ewma): pandas
     // ewm(adjust=True) weighting over the last 10 samples per user —
     // the recency-weighted level tracker beside q20's impulse-killing
-    // sliding median. One user-keyed window; the weighted fold is a
-    // sequential left-to-right map-side array expression, so the value
-    // is bit-stable across partitionings (both engines fold in the
-    // same association order; pow wobble absorbed by round 6).
+    // sliding median. The same user-keyed sorted sweep as q20; each row
+    // sums its ring of the last 10 values newest first, so the value is
+    // bit-stable across partitionings (both engines sum in the same
+    // association order; pow wobble absorbed by round 6).
     "q109_ewma" -> ((s, d) => {
       import s.implicits._
       graft.operators.Postprocess.ewma(
@@ -1997,10 +1997,8 @@ object TimeSeriesQueries {
          ORDER BY c.cohort_week, c.week_offset""",
 
     // Same trailing frame, same (1-α)^j weights summed NEWEST-FIRST —
-    // the association order of the span ≤ 16 lag branch Spark runs
-    // (terms j = 0..span-1, missing lags contributing exact 0.0 at the
-    // reduction tail, which list_reduce over only the available terms
-    // reproduces bit-for-bit).
+    // the association order of Postprocess.ewma's ring (terms j = 0 up
+    // to the frame's oldest row, from the current row's own term).
     "q109_ewma" ->
       """WITH sel AS (SELECT user_id, event_id, value,
              list(value) OVER (PARTITION BY user_id ORDER BY ts, event_id

@@ -80,11 +80,12 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("ewma: both branches match a driver-side brute force") {
-    // span 12 runs the lag composition, span 20 the collect_list fold
-    // — each checked against an independent per-row weighted mean
+    // one sweep serves every span (the name is from the lag/collect_list
+    // pair it replaced): spans 1, 12, 20 and 100 against an independent
+    // per-row weighted mean; key k3 has 7 rows, fewer than most spans
     val rnd = new scala.util.Random(3)
-    val df = Seq.tabulate(200)(i =>
-      ("k" + i % 3, i.toLong, rnd.nextInt(1000) / 7.0))
+    val df = (Seq.tabulate(200)(i => ("k" + i % 3, i.toLong, rnd.nextInt(1000) / 7.0)) ++
+      Seq.tabulate(7)(i => ("k3", i.toLong, rnd.nextInt(1000) / 7.0)))
       .toDF("key", "ts", "value")
     val rows = df.as[(String, Long, Double)].collect()
       .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3)).toMap
@@ -96,12 +97,48 @@ class OperatorsSpec extends SparkSpec {
         frame.zip(wts).map { case (x, wt) => x * wt }.sum / wts.sum
       }
     }
-    Seq(12, 20).foreach { span =>
+    Seq(1, 12, 20, 100).foreach { span =>
       val got = Postprocess.ewma(df, $"key", Seq($"ts"), $"value",
           alpha = 0.3, span = span)
         .orderBy("key", "ts").select("ewma").as[Double].collect().toSeq
-      got.zip(brute(span)).foreach { case (g, w) =>
+      val want = brute(span)
+      assert(got.length == want.length, s"span $span")
+      got.zip(want).foreach { case (g, w) =>
         assert(math.abs(g - w) < 1e-9, s"span $span: got $g want $w") }
+    }
+  }
+
+  /** The lag-column composition [[Postprocess.ewma]]'s sweep replaced
+    * (it served span ≤ 16): terms j = 0..span-1 summed newest first,
+    * a missing or null lag adding exact 0.0 to both sums. Kept here as
+    * the sweep's bit-exact reference. */
+  private def lagEwma(df: DataFrame, alpha: Double, span: Int): DataFrame = {
+    val w = Window.partitionBy($"key").orderBy($"ts")
+    val num = (0 until span).map { j =>
+      coalesce(lag($"value", j).over(w) * math.pow(1 - alpha, j), lit(0.0))
+    }.reduce(_ + _)
+    val den = (0 until span).map { j =>
+      when(lag($"value", j).over(w).isNotNull,
+        lit(math.pow(1 - alpha, j))).otherwise(lit(0.0))
+    }.reduce(_ + _)
+    df.withColumn("ewma", num / den)
+  }
+
+  test("ewma equals the lag-column composition exactly (spans 10, 16)") {
+    // five keys of uneven length over four input tasks and two shuffle
+    // partitions, signed values and scattered nulls (no all-null frame)
+    val df = spark.range(0, 900, 1, 4).select(
+      concat(lit("k"), (pmod(($"id" * 7) % 11, lit(5))).cast("string")).as("key"),
+      $"id".as("ts"),
+      when($"id" % 17 === 5, lit(null).cast("double"))
+        .otherwise((pmod(xxhash64($"id"), lit(2000L)) - 1000) / 7.0).as("value"))
+    def ewmas(out: DataFrame) = out.select("key", "ts", "ewma")
+      .as[(String, Long, Double)].collect().sortBy(t => (t._1, t._2)).toSeq
+    for (span <- Seq(10, 16)) {
+      val got = ewmas(Postprocess.ewma(df, $"key", Seq($"ts"), $"value",
+        alpha = 0.3, span = span))
+      assert(got.length == 900)
+      assert(got == ewmas(lagEwma(df, 0.3, span)), s"span $span")
     }
   }
 

@@ -514,8 +514,8 @@ class PlanInvariantsSpec extends SparkSpec {
   }
 
   test("q109 ewma: one user-keyed window, fold is map-side array work") {
-    // the weighted fold must ride the collect_list frame as a projection
-    // — the only hash exchange is the keyed window's
+    // the weighted sum is the sorted sweep's per-key work (the test name
+    // predates it) — the only hash exchange is the sweep's, on user_id
     val p = plan("q109_ewma")
     assert(!p.contains("CartesianProduct"), p)
     val keys = "hashpartitioning\\(([a-z_]+)#".r
