@@ -167,10 +167,6 @@ final case class NilmDataset(readings: DataFrame, channels: DataFrame) {
         .as("median_rate_s"),
         count(lit(1)).as("n_channels"))
 
-  /** `get_channels_by_label` (`UnifiedNILM.py:187-195`). */
-  def channelsByLabel(label: String): DataFrame =
-    channels.filter(lower(col("universal_label")) === label.toLowerCase)
-
   /** `get_common_channels` (`channel_utils.py:7-81`): houses that have
     * ALL `requiredLabels` (relational division, T2), then the best
     * channel per (house, label) by (variance, length) descending (W3 +

@@ -33,9 +33,9 @@ import org.apache.spark.sql.functions._
   *
   * Houses without an aggregate channel are skipped
   * (`channel_utils.py:208-209`); houses shorter than `seqLen` yield no
-  * windows. One shuffle keyed (dataset, house_id, window_id) assembles
-  * X and Y together — the X–Y pairing (J5) is a plain equi-join on the
-  * window key, not a positional pairing.
+  * windows. One sorted sweep per house ([[Windowing.windows]]) emits X
+  * and Y of each window together from the same rows, so the X–Y pairing
+  * (J5) holds by construction, not by a positional pairing.
   *
   * The label order is a collected scalar (A17 — tiny action feeding the
   * plan, like the reference's global sort) and the per-house series are
@@ -96,18 +96,17 @@ object TensorPrep {
     // caller releases after its terminal action.
     // repartition on house_id ALONE: hash partitioning on a SUBSET of
     // the group keys satisfies the clustering the (dataset, house_id,
-    // ts) pivot agg needs AND the (dataset, house_id) clustering the
-    // downstream windowing/assembly passes need — so the whole
-    // pivot → window-emit → X/Y-assembly chain runs on ONE exchange
-    // of the raw readings (the pivot's and the window's house-keyed
-    // exchanges both elide; the post-explode assembly agg stays
-    // partition-local). `dataset` is deliberately NOT a partitioning
-    // key: adapters synthesize it as a literal, and a literal in the
+    // ts) pivot agg needs, so the pivot runs on ONE exchange of the raw
+    // readings. `dataset` is deliberately NOT a partitioning key:
+    // adapters synthesize it as a literal, and a literal in the
     // partitioning defeats the semantic-equality check against the
-    // agg's aliased attribute — house_id alone still co-locates
-    // everything the chain groups on. A house's readings concentrate
-    // in one task — the per-house series is the reference's own unit
-    // of work, bounded by one house's history.
+    // agg's aliased attribute. The persisted pivot is read back through
+    // an InMemoryTableScan that reports no partitioning, so above it the
+    // house filter's agg (of per-task partial counts) and the window
+    // sweep (of the whole frame) each plan a (dataset, house_id)
+    // exchange (pinned in PlanInvariantsSpec). A house's rows concentrate in one task — the
+    // per-house series is the reference's own unit of work, bounded by
+    // one house's history.
     val wideAll = graft.Caching.persisted(labeled
       .repartition(col("house_id"))
       .groupBy("dataset", "house_id", "ts")
@@ -118,21 +117,15 @@ object TensorPrep {
       .agg(sum(col("__n_agg")).as("__na"))
       .filter(col("__na") > 0)
       .select("dataset", "house_id")
-    val wide = wideAll
+    // the sweep reads its values from the input row: x is the aggregate,
+    // y one float per label in `order`, so y comes out array<array<float>>
+    val xy = wideAll
       .join(broadcast(housesWithAgg), Seq("dataset", "house_id"))
-      .drop("__n_agg")
-    val em = Windowing.emit(wide,
-      Seq(col("dataset"), col("house_id")), Seq(col("ts")), seqLen, step)
-    val orderedRows =
-      array_sort(collect_list(struct(
-        col("idx"),
+      .select(col("dataset"), col("house_id"), col("ts"),
         col("aggregate").cast("float").as("x"),
-        array(order.map(l => col(s"`$l`").cast("float")): _*).as("ys"))))
-    em.groupBy("dataset", "house_id", "window_id")
-      .agg(orderedRows.as("rows"))
-      .select(col("dataset"), col("house_id"), col("window_id"),
-        transform(col("rows"), r => r("x")).as("x"),
-        transform(col("rows"), r => r("ys")).as("y"))
+        array(order.map(l => col(s"`$l`").cast("float")): _*).as("y"))
+    Windowing.windows(xy, Seq(col("dataset"), col("house_id")), Seq(col("ts")),
+      Seq(col("x"), col("y")), seqLen, step)
   }
 
   /** P8 activity mask (`train_bert_single.py:76-78`): keep windows

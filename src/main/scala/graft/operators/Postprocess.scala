@@ -4,14 +4,18 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, NumericType, StructType}
 
 /** On/off-series postprocessing operators from the reference's
   * disaggregation pipeline (`bert_single_appliance/postprocessing.py`):
   * binary thresholding, run-length analysis, minimum-duration run
   * zeroing, and sliding-median / EWMA smoothing — each one key shuffle
-  * (a window composition, or for the two smoothers one shared sorted
-  * sweep per key) instead of the reference's driver-side numpy scans.
+  * (a window composition, or for the two smoothers one sorted sweep per
+  * key on Spark's `flatMapSortedGroups`, [[sortedGroups]], which
+  * [[Windowing.windows]] shares) instead of the reference's driver-side
+  * numpy scans. The smoothers read `value` from the input row: it must
+  * be a numeric column of `df`, and callers project (key, order, value)
+  * first, since the sweep does not prune columns.
   */
 object Postprocess {
 
@@ -20,8 +24,6 @@ object Postprocess {
   private val StateCol = "__graft_state"
   private val RunIdCol = "__graft_run_id"
   private val RunLenCol = "__graft_run_len"
-  private val KeyCol = "__graft_key"
-  private val ValueCol = "__graft_value"
 
   /** Binary threshold (postprocessing.py:32-42): 1 where value >= t. */
   def threshold(value: Column, t: Double): Column =
@@ -78,7 +80,8 @@ object Postprocess {
     * reflect-pads the boundary and picks a low element for even windows;
     * see [[slidingMedianScipy]]); quantile_cont is what the DuckDB oracle
     * compares. Null values are skipped; an all-null frame yields null.
-    * Appends `median_value` (double; `value` is cast to double).
+    * Appends `median_value` (double; `value`, a numeric column of `df`,
+    * is read as a double).
     *
     * One form for every k: the keyed [[sweep]] with a dual-heap
     * (lazy-deletion) order-statistic structure — O(log k) per row. The
@@ -204,59 +207,67 @@ object Postprocess {
       element_at(array_sort(padded), kl + 1))
   }
 
-  /** The sorted per-key sweep both smoothing operators run: one hash
-    * exchange on `key`, `sortWithinPartitions(key, orderCols…)`
-    * (`orderCols` as given, so `.desc` works), then each key's rows in
-    * order. `kernel` maps the key's values (`value` cast to double, null
-    * kept) to one output per row, in order; each row comes back as the
-    * caller's columns plus `outCol` (double). A row waits in a queue
-    * until the kernel has emitted its output, so memory follows how far
-    * ahead the kernel reads: one row for [[ewma]], the whole key for
-    * [[slidingMedian]] (per-key data must fit a task — the bound every
-    * ordered-window operator carries). The sweep is opaque to column
-    * pruning: project the input first. */
+  /** The per-key sweep both smoothing operators run, on [[sortedGroups]].
+    * `value` is a numeric column of `df`, read from each row as a double
+    * (null kept). `kernel` maps the key's values to one output per row,
+    * in order; each row comes back as `df`'s columns plus `outCol`
+    * (double). A row waits in a queue until the kernel has emitted its
+    * output, so memory follows how far ahead the kernel reads: one row
+    * for [[ewma]], the whole key for [[slidingMedian]] (per-key data
+    * must fit a task — the bound every ordered-window operator carries). */
   private def sweep(df: DataFrame, key: Column, orderCols: Seq[Column],
                     value: Column, outCol: String)(
       kernel: Iterator[java.lang.Double] => Iterator[java.lang.Double]): DataFrame = {
-    // the key and the double value are appended after the sort (they do
-    // not cross the exchange) and ride after the caller's columns, so the
-    // sweep reads them at fixed indices and emits only the first `width`
+    val vi = inputColumn(df, value)
+    require(df.schema(vi).dataType.isInstanceOf[NumericType],
+      s"value must be numeric, got ${df.schema(vi).dataType}")
     val width = df.schema.length
-    val outSchema = df.schema.add(outCol, DoubleType, nullable = true)
-    df.repartition(key)
-      .sortWithinPartitions(key +: orderCols: _*)
-      .withColumn(KeyCol, key).withColumn(ValueCol, value.cast("double"))
-      .mapPartitions { rows =>
-        // consecutive same-key runs (the sort guarantees adjacency)
-        val it = rows.buffered
-        new Iterator[Row] {
-          private var out: Iterator[Row] = Iterator.empty
-          def hasNext: Boolean = out.hasNext || it.hasNext
-          def next(): Row = {
-            if (!out.hasNext) {
-              val k0 = it.head.get(width)
-              val pending = new java.util.ArrayDeque[Row]()
-              val values = new Iterator[java.lang.Double] {
-                def hasNext: Boolean = it.hasNext && it.head.get(width) == k0
-                def next(): java.lang.Double = {
-                  val r = it.next()
-                  pending.add(r)
-                  r.getAs[java.lang.Double](width + 1)
-                }
-              }
-              out = kernel(values).map { v =>
-                val r = pending.poll()
-                val fields = new Array[Any](width + 1)
-                var j = 0
-                while (j < width) { fields(j) = r.get(j); j += 1 }
-                fields(width) = v
-                new GenericRow(fields)
-              }
-            }
-            out.next()
+    sortedGroups(df, Seq(key), orderCols, df.schema.add(outCol, DoubleType, nullable = true)) {
+      (_, rows) =>
+        val pending = new java.util.ArrayDeque[Row]()
+        val values = rows.map { r =>
+          pending.add(r)
+          r.get(vi) match {
+            case d: java.lang.Double => d
+            case null => null
+            case x: Number => java.lang.Double.valueOf(x.doubleValue)
           }
         }
-      }(Encoders.row(outSchema))
+        kernel(values).map { v =>
+          val r = pending.poll()
+          val fields = new Array[Any](width + 1)
+          var j = 0
+          while (j < width) { fields(j) = r.get(j); j += 1 }
+          fields(width) = v
+          new GenericRow(fields)
+        }
+    }
+  }
+
+  /** The one per-key ordered sweep in the library (the smoothers and
+    * [[Windowing.windows]]): Spark's `flatMapSortedGroups`, planned as a
+    * `MapGroups` node that requires its child clustered on `keys` and
+    * sorted by `keys ++ orderCols` (`orderCols` as given, so `.desc`
+    * works) — EnsureRequirements adds one hash exchange on the keys and a
+    * sort, or reuses a clustering the child already has. `f` gets each
+    * key (a row of the key columns) and the key's rows (all of `df`'s
+    * columns, in order) and returns rows of `outSchema`. The node is opaque to column pruning:
+    * project the input first. */
+  private[operators] def sortedGroups(df: DataFrame, keys: Seq[Column],
+      orderCols: Seq[Column], outSchema: StructType)(
+      f: (Row, Iterator[Row]) => Iterator[Row]): DataFrame =
+    df.groupBy(keys: _*)
+      .as[Row, Row](Encoders.row(df.select(keys: _*).schema), Encoders.row(df.schema))
+      .flatMapSortedGroups(orderCols: _*)(f)(Encoders.row(outSchema))
+      .toDF()
+
+  /** The index of `c` among `df`'s columns; `c` must be a plain
+    * reference to one of them (a value the sweep reads from the row). */
+  private[operators] def inputColumn(df: DataFrame, c: Column): Int = {
+    val a = df.select(c).queryExecution.analyzed.output.head
+    val i = df.queryExecution.analyzed.output.indexWhere(_.exprId == a.exprId)
+    require(i >= 0, s"$c must be a column of the input (project it first)")
+    i
   }
 
   /** Order-statistic multiset for a sliding frame: max-heap `lo` holds

@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 /** Overlapping fixed-length sequence windows over ordered per-key series
   * — the distributed form of the reference's numpy stride-trick
@@ -11,43 +14,53 @@ import org.apache.spark.sql.expressions.Window
   * rows, partial tail dropped, so a series of n rows yields
   * ⌊(n − seqLen)/step⌋ + 1 windows (0 when n < seqLen).
   *
-  * Formulation: each row computes its 0-based position `idx` (one
-  * ordered-window pass per key), then *emits itself into every window
-  * that contains it* via an exploded id range — ≤ ⌈seqLen/step⌉ copies
-  * per row — and windows assemble with one groupBy. This is the
-  * Generator plan SURVEY §4 calls for: data expansion is exactly the
-  * overlap factor, shuffles are on (key, window_id), and no window frame
-  * is recomputed per row (a rowsBetween collect_list frame would copy
-  * seqLen values per row, i.e. step× more traffic).
+  * Formulation: one ordered sweep per key (`Postprocess.sortedGroups`, a
+  * `MapGroups` node — one hash exchange on the keys, one sort) keeps a
+  * ring of the key's last `seqLen` rows and emits a window at each row
+  * that ends one, so each row is read once and never copied per window.
   *
-  * Scale note: per-key series must be orderable within a partition for
-  * the row_number pass — keys are fine-grained (dataset, house, channel)
-  * streams. The emit/groupBy stage is keyed by (key, window_id), so
-  * window assembly parallelizes beyond the key count.
+  * Scale note: a key's rows stream through one task, and memory holds
+  * `seqLen` rows per key — keys are fine-grained (dataset, house,
+  * channel) streams, the reference's own unit of work.
   */
 object Windowing {
 
-  /** Per-row window membership: input + `idx` (0-based) + exploded
-    * `window_id` (0-based). A row at idx belongs to window w when
-    * w*step <= idx < w*step + seqLen and the window is complete
-    * (w*step + seqLen <= n, n = series length). */
-  def emit(df: DataFrame, keys: Seq[Column], orderCols: Seq[Column],
-           seqLen: Int, step: Int): DataFrame = {
+  /** One row per window: the `keys` columns, `window_id` (bigint, 0-based
+    * from the key's first row) and, per column of `values`, an array of
+    * its `seqLen` values in `orderCols` order (named and typed like the
+    * column; a null keeps its slot). `values` are columns of `df` (read
+    * from the input row), so project the keys, order columns and values
+    * first — the sweep does not prune columns. The window starting at
+    * row `idx` (0-based) is emitted when row `idx + seqLen − 1` arrives,
+    * if `idx` is a multiple of `step`. */
+  def windows(df: DataFrame, keys: Seq[Column], orderCols: Seq[Column],
+              values: Seq[Column], seqLen: Int, step: Int): DataFrame = {
     require(seqLen > 0 && step > 0, s"seqLen/step must be positive")
-    val w = Window.partitionBy(keys: _*).orderBy(orderCols: _*)
-    val withIdx = df
-      .withColumn("idx", row_number().over(w).cast("long") - 1)
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(keys: _*)))
-    val lastWin = least(
-      floor(col("idx") / step), // windows starting at or before idx
-      floor((col("n") - seqLen) / step)) // last complete window
-    val firstWin = greatest(
-      lit(0L), ceil((col("idx") - seqLen + 1).cast("double") / step).cast("long"))
-    withIdx
-      .withColumn("window_id",
-        explode(when(firstWin <= lastWin, sequence(firstWin, lastWin))
-          .otherwise(array().cast("array<long>"))))
-      .drop("n")
+    val vi = values.map(Postprocess.inputColumn(df, _)).toArray
+    val outSchema = StructType(df.select(keys: _*).schema.fields ++
+      (StructField("window_id", LongType, nullable = false) +: vi.toSeq.map { i =>
+        val f = df.schema(i)
+        StructField(f.name, ArrayType(f.dataType, f.nullable), nullable = false)
+      }))
+    Postprocess.sortedGroups(df, keys, orderCols, outSchema) { (key, rows) =>
+      // ring(c)(i % seqLen) holds value column c of the key's row i
+      val ring = Array.ofDim[Any](vi.length, seqLen)
+      var i = -1L
+      rows.flatMap { r =>
+        i += 1
+        val slot = (i % seqLen).toInt
+        var c = 0
+        while (c < vi.length) { ring(c)(slot) = r.get(vi(c)); c += 1 }
+        val start = i - seqLen + 1
+        if (start < 0 || start % step != 0) None
+        else {
+          val first = (start % seqLen).toInt
+          Some(Row.fromSeq(key.toSeq ++ (start / step +: ring.toSeq.map { vs =>
+            ArraySeq.tabulate[Any](seqLen)(j => vs((first + j) % seqLen))
+          })))
+        }
+      }
+    }
   }
 
   /** The reference's step from (seqLen, overlap): fractional overlap is
@@ -57,19 +70,6 @@ object Windowing {
     val raw = if (fractional) seqLen - (overlap * seqLen).toInt
     else seqLen - overlap.toInt
     math.max(1, raw)
-  }
-
-  /** Assembled windows: one row per (keys..., window_id) with the
-    * ordered value array (exactly seqLen elements, float32 like the
-    * reference's tensors, `channel_utils.py:203`). */
-  def collect(df: DataFrame, keys: Seq[Column], orderCols: Seq[Column],
-              value: Column, seqLen: Int, step: Int): DataFrame = {
-    val emitted = emit(df.withColumn("__v", value.cast("float")),
-      keys, orderCols, seqLen, step)
-    emitted
-      .groupBy(keys :+ col("window_id"): _*)
-      .agg(transform(array_sort(collect_list(struct(col("idx"), col("__v")))),
-        s => s("__v")).as("window"))
   }
 
   /** W5 — truncate every key's series to the minimum length across keys

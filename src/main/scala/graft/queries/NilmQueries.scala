@@ -113,24 +113,24 @@ object NilmQueries {
         .orderBy($"house_id", $"universal_label")
     }),
 
-    // W4 sequence windows (seq_len 16, overlap 0.5 → step 8): every row
-    // emits into the ≤2 windows containing it (Generator plan), windows
-    // assemble with one groupBy; partial tails dropped. Content checked
-    // by an order-sensitive md5 over the window's values.
+    // W4 sequence windows (seq_len 16, overlap 0.5 → step 8): one sorted
+    // sweep per user emits each window's `cents` array from a ring of the
+    // last 16 rows; partial tails dropped. Content checked by an
+    // order-sensitive md5 over the window's values; `sum_cents` skips
+    // nulls like SQL sum.
     "q38_windows" -> ((s, d) => {
       import s.implicits._
       val seqLen = 16
       val step = Windowing.stepOf(seqLen, 0.5, fractional = true)
       val ev = events(s, d).select($"user_id", $"ts", $"event_id",
         round($"value" * 100, 0).cast("long").as("cents"))
-      Windowing.emit(ev, Seq($"user_id"), Seq($"ts", $"event_id"), seqLen, step)
-        .groupBy($"user_id", $"window_id")
-        .agg(
-          count(lit(1)).as("n"),
-          sum($"cents").as("sum_cents"),
-          md5(concat_ws(",",
-            transform(array_sort(collect_list(struct($"idx", $"cents"))),
-              x => x("cents").cast("string")))).as("whash"))
+      Windowing.windows(ev, Seq($"user_id"), Seq($"ts", $"event_id"), Seq($"cents"),
+          seqLen, step)
+        .select($"user_id", $"window_id",
+          size($"cents").cast("long").as("n"),
+          aggregate($"cents", lit(null).cast("long"),
+            (acc, c) => coalesce(acc + c, acc, c)).as("sum_cents"),
+          md5(concat_ws(",", transform($"cents", c => c.cast("string")))).as("whash"))
         .orderBy($"user_id", $"window_id")
     }),
 
@@ -245,20 +245,17 @@ object NilmQueries {
       import s.implicits._
       val ev = events(s, d).select($"user_id", $"ts", $"event_id",
         round($"value" * 100, 0).cast("long").as("cents"))
-      val win = Windowing
-        .emit(ev, Seq($"user_id"), Seq($"ts", $"event_id"), 16, 8)
-        .groupBy($"user_id", $"window_id")
-        .agg(collect_list($"cents").as("w"))
-      win
+      Windowing.windows(ev, Seq($"user_id"), Seq($"ts", $"event_id"), Seq($"cents"), 16, 8)
         .select($"user_id", $"window_id",
-          size(filter($"w", v => v > 10000L)).as("n_active"))
+          size(filter($"cents", v => v > 10000L)).as("n_active"))
         .filter($"n_active" > 5)
         .orderBy($"user_id", $"window_id")
     }),
 
     // E2 end-to-end: the tensor-prep composition (adapter → ts-aligned
-    // pivot → W4 windows → X/Y assembly) checked by order-sensitive
-    // hashes of X and of Y's first label component. Values pass through
+    // pivot → one sorted sweep per house emitting each window's X and Y)
+    // checked by order-sensitive hashes of X and of Y's first label
+    // component. Values pass through
     // the float32 tensor cast, then double-promote before scaling so
     // both engines round identically.
     "q49_tensor_windows" -> ((s, d) => {

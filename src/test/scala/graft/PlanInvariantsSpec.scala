@@ -523,6 +523,36 @@ class PlanInvariantsSpec extends SparkSpec {
     assert(keys == Set("user_id"), s"unexpected shuffle keys $keys:\n$p")
   }
 
+  test("q38 windows: one user-keyed sorted sweep, no row copies, no window-keyed agg") {
+    // Windowing.windows emits each window from a ring of the key's rows:
+    // no exploded copies (Generate), no row-number Window, no collect_list
+    // (node names with their trailing space: the sweep's closure class is
+    // graft.operators.Windowing$…)
+    val p = plan("q38_windows")
+    for (absent <- Seq("Generate ", "Window ", "collect_list")) assert(!p.contains(absent), p)
+    assert(countOf(p, "MapGroups") == 1, p)
+    val keys = "hashpartitioning\\(([a-z_]+)#".r.findAllMatchIn(p).map(_.group(1)).toList
+    assert(keys == List("user_id"), s"unexpected shuffle keys $keys:\n$p")
+  }
+
+  test("q49 tensor windows: the pivot's house exchange, then one sweep exchange") {
+    // the persisted pivot is read through an InMemoryTableScan that
+    // carries no partitioning, so above it the house filter's agg (of
+    // partial counts) and the window sweep (of the whole frame) each
+    // plan a (dataset, house_id) exchange
+    val full = plan("q49_tensor_windows")
+    val p = stripCachedBodies(full)
+    for (absent <- Seq("Generate ", "Window ", "collect_list")) assert(!full.contains(absent), full)
+    assert(countOf(p, "MapGroups") == 1, p)
+    val outer = "hashpartitioning\\(([a-z_]+)#\\d+, ([a-z_]+)#".r.findAllMatchIn(p)
+      .map(m => (m.group(1), m.group(2))).toList
+    assert(outer == List.fill(2)(("dataset", "house_id")), s"unexpected shuffle keys $outer:\n$p")
+    assert(countOf(p, "hashpartitioning(") == 2, p)
+    // inside the cache: the pivot's one exchange of the labeled readings
+    assert("hashpartitioning\\(house_id#\\d+L?, \\d+\\), REPARTITION_BY_COL".r
+      .findFirstIn(full).isDefined, full)
+  }
+
   test("q110 source top terms: bounded-buffer ranking, no window sort") {
     // same contract as q74: graft_topk's map-side partial keeps ≤k
     // rows per source per task; a row_number formulation would show
